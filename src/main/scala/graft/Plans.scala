@@ -678,14 +678,17 @@ object Plans {
         "BNLJ) and the smoothed probability is one IEEE division of " +
         "exact integers fused into codegen. The top-50 cut is a " +
         "TakeOrderedAndProject with a total order."),
-      "v_kmeans_iter" -> ("100× plan: three Lloyd rounds, each = the " +
-        "v_kmeans corpus x broadcast(16 centroids) argmax (map-side " +
-        "combined, exchange carries one row per vector) + a (cell, dim) " +
-        "decimal-mean agg emitting k·d rows, eagerly localCheckpointed " +
-        "and broadcast back — one shuffle per round, Lloyd's " +
-        "communication lower bound. The audited final plan is the last " +
-        "round's k·d-row checkpoint + rounding projection; the per-round " +
-        "shape is v_kmeans's audited plan, 3x."),
+      "v_kmeans_iter" -> ("100× plan: three Lloyd rounds with the k × d " +
+        "model (16 × 64 doubles) held on the driver. The corpus is " +
+        "persisted for the run; each round is ONE action — the per-row " +
+        "AssignCellExpr projection against the driver arrays (no " +
+        "shuffle), posexplode, and the (cell, dim) decimal-mean partial " +
+        "agg whose k·d output rows are collected: one shuffle per round, " +
+        "Lloyd's communication lower bound, O(k·d) driver traffic. Empty " +
+        "cells keep their centroid in the driver arrays. The audited " +
+        "final plan is one LocalTableScan: the optimizer folds the " +
+        "rounding projection into the last round's k·d rows. The " +
+        "per-round shape is v_kmeans's audited plan, 3x."),
       "v_knn_ivf_probe" -> ("100× plan: THE steady-state ANN serving " +
         "shape — the assignment is a parquet scan of the persisted index " +
         "table (built once by loadOrBuildSampled; at deployment scale " +
@@ -763,17 +766,17 @@ object Plans {
         "(driver r7 median 9.9 s with min 3.2 s — the min agrees with " +
         "the quiet floor; the median was contention)."),
       "v_kmeans_conv" -> ("100× plan: the convergence-terminated Lloyd " +
-        "loop — per round the audited v_kmeans shape (corpus × " +
-        "broadcast(16 centroids) argmax, map-side combined, one row per " +
-        "vector on the exchange; (cell,dim) decimal-mean update of k·d " +
-        "rows, localCheckpointed) plus ONE driver-side scalar per round: " +
-        "the max-abs centroid movement, a k·d-row join aggregated to one " +
-        "row — the standard iterative-driver pattern, O(k·d) driver " +
-        "traffic per round regardless of corpus size. The audited plan " +
-        "below is the stopping round's checkpoint + rounding projection; " +
-        "rounds are data-dependent (sf0.001→4, sf0.01→3, sf0.1→2) and " +
-        "the stop_round column puts the termination decision itself " +
-        "under the hash gate."),
+        "loop on the v_kmeans_iter round — per round ONE action over the " +
+        "persisted corpus (per-row AssignCellExpr argmax against the " +
+        "driver-held 16 × 64 model, (cell,dim) decimal-mean partial agg, " +
+        "k·d rows collected). The max-abs centroid movement is driver " +
+        "arithmetic over those k·d doubles (the same IEEE " +
+        "subtract/abs/max, no join, no extra job): O(k·d) driver traffic " +
+        "per round regardless of corpus size. The audited plan below is " +
+        "one LocalTableScan (the stopping round's rows, rounding folded " +
+        "in by the optimizer); rounds are data-dependent (sf0.001→4, " +
+        "sf0.01→3, sf0.1→2) and the stop_round column puts the " +
+        "termination decision itself under the hash gate."),
       "g_pagerank_conv" -> ("100× plan: the convergence idiom on the " +
         "second iterative family — per round the audited g_pagerank " +
         "shape (edge×rank key-equality join + decimal-exact dst sum, " +
@@ -796,16 +799,18 @@ object Plans {
         "and the query runs ~1 s). The exact Hamming check is codegen'd " +
         "xor+bit_count per candidate."),
       "v_knn_ivf_trained" -> ("100× plan: train → index → serve in one " +
-        "declarative composition — the 2 training rounds run inside " +
-        "eager localCheckpoints (k·d-row frames, lineage O(1)), and the " +
-        "serving plan is exactly v_knn_ivf's audited shape with TRAINED " +
-        "centroids in place of seeds: corpus × broadcast(16 centroid " +
-        "rows) argmax (map-side combined, one row per vector on the " +
-        "exchange), an nprobe-row broadcast probe-cell pick scored " +
-        "in-plan with the same decimal cosine, and exact rerank over " +
-        "only the probed cells. Training quality changes WHICH cells " +
-        "exist, not the plan shape — at scale the trained assignment is " +
-        "the corpus bucketing column like the sampled variant."),
+        "declarative composition — the 2 training rounds are the " +
+        "v_kmeans_iter driver-model round (one k·d-row collect each), " +
+        "and the serving plan is v_knn_ivf's audited shape with TRAINED " +
+        "centroids in place of seeds: the per-row AssignCellExpr " +
+        "projection against the trained arrays (no shuffle), an " +
+        "nprobe-row broadcast probe-cell pick scored with the same " +
+        "decimal cosine over the 16 trained centroids (a local relation " +
+        "the optimizer folds into one LocalTableScan), and exact rerank " +
+        "over only the probed cells. " +
+        "Training quality changes WHICH cells exist, not the plan shape " +
+        "— at scale the trained assignment is the corpus bucketing " +
+        "column like the sampled variant."),
       "q_recursive_cte" -> ("100× plan: Spark plans WITH RECURSIVE as a " +
         "UnionLoop — the anchor scan plus one iterated step per level; " +
         "each step is a frontier-sized self-map (node DIV 2), never a " +

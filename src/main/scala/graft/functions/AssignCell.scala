@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *
   * `cn2s` MUST be the decimal-exact squared norms as Spark computed them
   * (collect them from a `Similarity.decNorm2` projection — k scalar rows,
-  * the same bounded-driver-materialization class as the k-means movement
-  * scalar), so the recomposed cosine is the identical double.
+  * the same bounded-driver-materialization class as the k-means model
+  * collect), so the recomposed cosine is the identical double.
   *
   * A vector with a null element (or a length mismatch against every
   * centroid) yields a NULL cell — such rows do not occur in the gated

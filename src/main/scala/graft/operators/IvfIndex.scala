@@ -81,7 +81,7 @@ object IvfIndex {
   def assignSampledWith(corpus: DataFrame, seedSrc: DataFrame, idCol: String,
                         vecCol: String, nCells: Int): DataFrame = {
     // BOUNDED driver materialization: exactly nCells centroid rows (the
-    // same class as the k-means movement scalar) — the index's trained
+    // same class as the k-means model collect) — the index's trained
     // parameters, not corpus data. cn2 is collected from the SAME
     // decNorm2 expression the former broadcast carried, so the per-cell
     // norm doubles are bit-identical.

@@ -19,36 +19,84 @@ object VectorOps {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  /** One Lloyd ASSIGNMENT step against a (cell, pos, m) centroid frame:
-    * pack centroids to arrays, broadcast, relational argmax of the
-    * decimal-exact cosines (ties → smallest cell). Shared by the
-    * iterated/convergent/trained k-means blocks. The centroid norm is one
-    * decimal dot per CELL (rides the broadcast) and the vector norm one
-    * per ROW — cosineFromParts recomposes the identical cosine doubles the
-    * former per-pair cosineCols produced (3 dots/pair → 1), so assignment,
-    * argmax, and every downstream hash are unchanged. */
-  private def assignToCentroids(e: DataFrame, cent: DataFrame): DataFrame = {
-    val centArr = cent.groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        st => st.getField("m")).as("ce"))
-      .withColumn("cn2", Similarity.decNorm2(col("ce")))
-    // BOUNDED driver materialization: k centroid rows (the model being
-    // trained, not corpus data — the Lloyd loops already take a driver
-    // action per round). cn2 collected from the same decNorm2 expression
-    // the former broadcast carried → identical doubles, and the per-row
-    // AssignCellExpr projection replaces the corpus × broadcast(k)
-    // explosion + shuffled argmax (same values, ties, hashes — see
-    // AssignCellSpec).
-    val rows = centArr.orderBy("cell").collect()
-    require(rows.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
-      s"assignToCentroids: cells must be contiguous 0..${rows.length - 1}")
-    val cents: Array[Array[Double]] = rows.map(_.getSeq[Double](1).toArray)
-    val cn2s: Array[Double] = rows.map(_.getDouble(2))
+  /** One Lloyd ASSIGNMENT step against driver-held centroids: the per-row
+    * AssignCellExpr projection (decimal-exact cosine argmax, ties →
+    * smallest cell — see AssignCellSpec). cn2 comes from the same
+    * `Similarity.decNorm2` expression over a driver-local frame (a
+    * LocalRelation the optimizer folds, no job), so the norms are the
+    * identical doubles. Cells are the array indices, contiguous by
+    * construction. */
+  private def assignToCentroids(e: DataFrame,
+                                cents: Array[Array[Double]]): DataFrame = {
+    val cn2s = centroidFrame(e.sparkSession, cents)
+      .select(Similarity.decNorm2(col("ce"))).collect().map(_.getDouble(0))
     import org.apache.spark.sql.GraftPlanBridge
     e.select(col("vec_id"), col("embedding"),
       GraftPlanBridge.exprColumn(graft.functions.AssignCellExpr(
         GraftPlanBridge.columnExpr(col("embedding")), cents, cn2s, 1e-6))
         .cast("int").as("cell"))
+  }
+
+  /** Driver centroids as a local (cell, ce array<double>) frame. */
+  private def centroidFrame(s: SparkSession,
+                            cents: Array[Array[Double]]): DataFrame =
+    s.createDataFrame(cents.toSeq.zipWithIndex.map { case (c, i) =>
+      (i, c.toSeq) }).toDF("cell", "ce")
+
+  /** A Lloyd run's result: the seed vectors (vec_ids 0..k-1), the final
+    * centroids, the last round's (cell, pos, um, n_members) rows as a
+    * driver-local frame, and the number of rounds run. */
+  private[graft] final case class Lloyd(seeds: Array[Seq[Float]],
+                                        cents: Array[Array[Double]],
+                                        last: DataFrame, rounds: Int)
+
+  /** Lloyd k-means over (vec_id, embedding) with the k × d model on the
+    * driver, seeded with vec_ids 0..k-1. The corpus is persisted for the
+    * run (MLlib's KMeans convention; the seed collect materializes it) and
+    * released before returning. Each round is ONE action: assignment
+    * against the driver arrays, posexplode, and the (cell, pos)
+    * decimal-exact mean + member count collected as k·d rows — driver
+    * traffic O(k·d) per round regardless of corpus size. Empty cells keep
+    * their previous centroid (the standard Lloyd convention). Means stay
+    * UNROUNDED doubles between rounds: both engines divide identical
+    * decimal-exact sums by identical counts, so the doubles agree
+    * bit-for-bit. Rounds run until the max absolute per-dimension movement
+    * drops below `eps` (strict <) or `maxRounds` is reached; eps = 0 is a
+    * fixed unroll. The movement is the IEEE subtract/abs/max over those
+    * identical doubles, so the stopping decision is bit-reproducible (no
+    * double→decimal re-rounding). */
+  private[graft] def lloyd(corpus: DataFrame, k: Int, maxRounds: Int,
+                           eps: Double = 0.0): Lloyd = {
+    val e = corpus.persist()
+    try {
+      val seedRows = e.filter(col("vec_id") < k).collect().sortBy(_.getLong(0))
+      require(seedRows.map(_.getLong(0)).sameElements(0L until k),
+        s"need ids 0..${k - 1} as seeds, found ${seedRows.length}")
+      val seeds = seedRows.map(_.getSeq[Float](1))
+      var cents = seeds.map(_.map(_.toDouble).toArray)
+      var last: DataFrame = null
+      var r = 0
+      var move = Double.PositiveInfinity
+      while (r < maxRounds && !(move < eps)) {
+        r += 1
+        val upd = assignToCentroids(e, cents)
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
+          .groupBy("cell", "pos")
+          .agg((sum(col("x").cast("double").cast(DecimalType(28, 16)))
+              .cast("double") / count(lit(1))).as("um"),
+            count(lit(1)).as("n_members"))
+        val rows = upd.collect()
+        val next = cents.map(_.clone)
+        rows.filterNot(_.isNullAt(0)).foreach { row =>
+          next(row.getInt(0))(row.getInt(1)) = row.getDouble(2) }
+        move = next.indices.iterator.flatMap(c => next(c).indices.iterator
+          .map(p => math.abs(next(c)(p) - cents(c)(p)))).max
+        cents = next
+        last = e.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), upd.schema)
+      }
+      Lloyd(seeds, cents, last, r)
+    } finally e.unpersist()
   }
 
   /** Shared PCA chain (v_pca / v_abtt): per-dimension decimal-exact means
@@ -653,98 +701,38 @@ object VectorOps {
     }),
     "v_kmeans_iter" -> ((s, dir) => {
       // THREE full Lloyd rounds, oracled end-to-end via the PageRank
-      // fixed-round-unroll idiom: each round is (a) the relational argmax
-      // assignment — corpus × broadcast(16 centroid rows), map-side
-      // combined, ONE row per vector on the exchange — and (b) the
-      // (cell, dim)-keyed decimal mean update, whose k·d-row output is
-      // localCheckpointed (lineage O(1) in rounds) and broadcast back as
-      // the next round's centroids: one shuffle per round, Lloyd's
-      // communication lower bound. Empty cells keep their previous
-      // centroid (the standard Lloyd convention), via the left-join
-      // coalesce. Means stay UNROUNDED doubles between rounds — both
-      // engines divide identical decimal-exact sums by identical counts,
-      // so the doubles agree bit-for-bit; rounding happens only at output.
+      // fixed-round-unroll idiom: each round is the [[lloyd]] round — the
+      // per-row AssignCellExpr argmax against the 16 driver-held
+      // centroids, then the (cell, dim)-keyed decimal mean update whose
+      // k·d rows are the round's one collect: one shuffle per round,
+      // Lloyd's communication lower bound. Rounding happens only at
+      // output.
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      var cent: DataFrame = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").cast("int").as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "xf")))
-        .select(col("cell"), col("pos"), col("xf").cast("double").as("m"))
-      var upd: DataFrame = null
-      (1 to 3).foreach { _ =>
-        val assigned = assignToCentroids(e, cent)
-        // k·d rows; eager localCheckpoint materializes the round (one job)
-        // and truncates lineage so 3 rounds don't nest into one mega-plan
-        upd = assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "pos")
-          .agg((sum(col("x").cast("double").cast(DecimalType(28, 16)))
-              .cast("double") / count(lit(1))).as("um"),
-            count(lit(1)).as("n_members"))
-          .localCheckpoint(true)
-        cent = cent.as("p")
-          .join(upd.select(col("cell"), col("pos"), col("um")),
-            Seq("cell", "pos"), "left")
-          .select(col("cell"), col("pos"), coalesce(col("um"), col("m")).as("m"))
-      }
-      upd.select(col("cell"), col("pos"), round(col("um"), 6).as("c_val"),
-        col("n_members"))
+      lloyd(e, k = 16, maxRounds = 3).last
+        .select(col("cell"), col("pos"), round(col("um"), 6).as("c_val"),
+          col("n_members"))
     }),
     "v_kmeans_conv" -> ((s, dir) => {
       // CONVERGENCE-terminated Lloyd — the "run until centroids stop
       // moving" loop v_kmeans_iter's fixed unroll couldn't express. Rounds
       // run until the max absolute per-dimension centroid movement drops
-      // below EPS (strict <), capped at MAXR. The round count is
-      // data-dependent but DETERMINISTIC: each round's means are doubles
-      // obtained by dividing identical decimal-exact sums by identical
-      // counts in both engines, so they agree bit-for-bit; the movement is
-      // an IEEE subtraction + order-independent max over those identical
-      // doubles, so the stopping decision is bit-reproducible too (no
-      // double→decimal re-rounding, whose half-way ties could diverge
-      // across engines). The stopping round is emitted as a column, so the
-      // oracle gate proves the TERMINATION DECISION, not just the
-      // centroids. The per-round driver-side action is ONE scalar (the
-      // movement max) — the standard iterative-driver pattern; everything
-      // row-shaped stays distributed, one shuffle per round (Lloyd's
-      // communication lower bound), localCheckpoint keeping lineage O(1).
+      // below eps (strict <), capped at 5 rounds. The round count is
+      // data-dependent but DETERMINISTIC (see [[lloyd]]: identical
+      // doubles in both engines, IEEE movement), and the stopping round
+      // is emitted as a column, so the oracle gate proves the
+      // TERMINATION DECISION, not just the centroids. The model stays on
+      // the driver: each round is one collect of k·d rows and the
+      // movement is driver arithmetic over them.
       // eps chosen from the measured movement trajectory so the stop is
       // INTERIOR at every test SF (movements: r1 ~0.3, r2 0.025-0.05,
       // then slow decay): sf0.001 stops at round 4, sf0.01 at 3, sf0.1
       // at 2 — three corpora, three different data-driven round counts,
       // all under the cap. A rule that always hit the cap would be a
       // fixed unroll in disguise.
-      val eps = 0.03
-      val maxR = 5
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      var cent: DataFrame = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").cast("int").as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "xf")))
-        .select(col("cell"), col("pos"), col("xf").cast("double").as("m"))
-      var upd: DataFrame = null
-      var r = 0
-      var stopped = false
-      while (r < maxR && !stopped) {
-        r += 1
-        val assigned = assignToCentroids(e, cent)
-        upd = assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "pos")
-          .agg((sum(col("x").cast("double").cast(DecimalType(28, 16)))
-              .cast("double") / count(lit(1))).as("um"),
-            count(lit(1)).as("n_members"))
-          .localCheckpoint(true)
-        val cNext = cent.as("p")
-          .join(upd.select(col("cell"), col("pos"), col("um")),
-            Seq("cell", "pos"), "left")
-          .select(col("cell"), col("pos"), coalesce(col("um"), col("m")).as("m"))
-          .localCheckpoint(true)
-        val move = cNext.as("n")
-          .join(cent.as("p"), Seq("cell", "pos"))
-          .agg(max(abs(col("n.m") - col("p.m")))).first().getDouble(0)
-        if (move < eps) stopped = true
-        cent = cNext
-      }
-      upd.select(col("cell"), col("pos"), round(col("um"), 6).as("c_val"),
-        col("n_members"), lit(r).as("stop_round"))
+      val m = lloyd(e, k = 16, maxRounds = 5, eps = 0.03)
+      m.last.select(col("cell"), col("pos"), round(col("um"), 6).as("c_val"),
+        col("n_members"), lit(m.rounds).as("stop_round"))
     }),
     "v_knn_ivf_trained" -> ((s, dir) => {
       // TRAINED-centroid IVF, fully hash-gated: 2 Lloyd rounds (the
@@ -759,34 +747,14 @@ object VectorOps {
       // the sampled variant — training quality changes WHICH cells exist,
       // not the serving plan shape.
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      var cent: DataFrame = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").cast("int").as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "xf")))
-        .select(col("cell"), col("pos"), col("xf").cast("double").as("m"))
-      (1 to 2).foreach { _ =>
-        val assigned = assignToCentroids(e, cent)
-        val upd = assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "pos")
-          .agg((sum(col("x").cast("double").cast(DecimalType(28, 16)))
-              .cast("double") / count(lit(1))).as("um"))
-          .localCheckpoint(true)
-        cent = cent.as("p")
-          .join(upd.select(col("cell"), col("pos"), col("um")),
-            Seq("cell", "pos"), "left")
-          .select(col("cell"), col("pos"), coalesce(col("um"), col("m")).as("m"))
-      }
-      val centArr = cent.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          st => st.getField("m")).as("ce"))
+      val m = lloyd(e, k = 16, maxRounds = 2)
       // final assignment of the corpus to the trained centroids
-      val assigned = assignToCentroids(e, cent)
-      val query = e.filter(col("vec_id") === 0L)
-        .select("embedding").first().getSeq[Float](0)
+      val assigned = assignToCentroids(e, m.cents)
+      val query = m.seeds(0) // vec_id 0
       // probe-cell selection IN-PLAN with the same decimal cosine the
       // assignment used (the probeCells rationale: driver double-math
       // could flip near-tied centroids vs the oracle)
-      val probes = centArr
+      val probes = centroidFrame(s, m.cents)
         .select(col("cell"),
           Similarity.cosineCols(typedLit(query), col("ce")).as("qc"))
         .orderBy(col("qc").desc, col("cell").asc)
@@ -1043,7 +1011,7 @@ object VectorOps {
       // Plan: the coverage frame (vec_id, max sim so far) updates with
       // ONE corpus-pass decimal-cosine column against the newest pick
       // (greatest() of exact doubles — order-independent) and
-      // re-checkpoints (O(1) lineage, the Lloyd idiom); the pick itself
+      // re-checkpoints (O(1) lineage); the pick itself
       // is a 1-row TakeOrdered driver scalar per round. k corpus passes
       // total — the algorithm's inherent lower bound — and the per-pick
       // state the driver holds is k ids, never data. At 100 TB k-center

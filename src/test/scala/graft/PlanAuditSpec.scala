@@ -55,8 +55,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // v_knn_ivf_append, v_knn_ivf_trained) left this list in round 9: the
     // corpus x broadcast(seeds) argmax became the per-row AssignCellExpr
     // projection, so their plans no longer contain ANY nested-loop join.
-    // (v_kmeans_iter's per-round work runs inside eager localCheckpoints —
-    // its audited final plan is a checkpoint scan + projection.)
+    // (v_kmeans_iter's rounds run eagerly with the model on the driver —
+    // its audited final plan is a LocalTableScan + projection.)
 
   test("no declared query plans a cartesian or an unsanctioned nested loop") {
     val audited = SparkEntry.queries.toSeq.sortBy(_._1)
