@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -16,7 +15,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // n=3 by default: round 3→4 ran IDENTICAL code and a single contended
     // run swung individual queries 0.74×–5.3×; medians of 3 are the minimum
     // that survives one bad interleaving. Override via SPARK_GRAFT_BENCH_REPS.
@@ -27,14 +25,8 @@ object Bench {
     // a real deployment sizes partitions to the data (~128 MB targets),
     // which is what SPARK_GRAFT_SHUFFLE models (AQE still coalesces small
     // ones back down, so oversizing is safe; undersizing is not)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(Engine.cores, sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
     // steady-state warmup (untimed): touch every table once so file
     // listing, footer reads, and codegen/JIT warm-up don't land on
     // whichever query happens to run first. The counts double as the
@@ -78,10 +70,8 @@ object Bench {
       // full-inventory runs, contention 1.350/1.375) — the metric was
       // measuring compiler warm-up, not host contention. The warm-up
       // cost is not hidden: it is summed and published as "cold_total"
-      // in the artifact. Skippable (SPARK_GRAFT_BENCH_NOWARMUP=1) for
-      // cold-start studies.
-      val cold = if (sys.env.contains("SPARK_GRAFT_BENCH_NOWARMUP")) 0.0
-        else run1()
+      // in the artifact.
+      val cold = run1()
       if (cold > 0) coldTotal += cold
       var ts = (1 to reps).map(_ => run1())
       // CONTENTION-AWARE retry (round-8 verdict: three rounds running the

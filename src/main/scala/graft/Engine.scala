@@ -10,8 +10,14 @@ import org.apache.spark.sql.SparkSession
   * a real cluster would be overridden per-job anyway).
   */
 object Engine {
-  /** Defaults that should hold on any deployment of this engine. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
+  /** Task threads of this deployment: `SPARK_GRAFT_CPUS` if set, else the
+    * host's processors capped at 32. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
+
+  /** Defaults that should hold on any deployment of this engine; `cores`
+    * sizes the per-task budgets below. */
+  def configure(b: SparkSession.Builder, cores: Int = Engine.cores): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     // TopKPerKey retained-row budget, sized to the heap/task ratio instead
     // of the operator's 1M-row cap: per-task heap state is ~1 KB per
@@ -23,10 +29,7 @@ object Engine {
     // production sizing lands back on the 1M cap.
     .config("spark.graft.topk.rowBudget",
       math.max(1L << 14, math.min(1L << 20,
-        Runtime.getRuntime.maxMemory /
-          sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-            .getOrElse(Runtime.getRuntime.availableProcessors.min(32)) /
-          1024)).toString)
+        Runtime.getRuntime.maxMemory / cores / 1024)).toString)
     // ObjectHashAggregate (min_by/max_by/collect_*) falls back to
     // sort-based aggregation after this many distinct keys per partition;
     // the 128 default pre-dates memory-tracked buffers and turns every
@@ -51,40 +54,28 @@ object Engine {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    // AQE coalesces DOWN from the initial partition count but never splits
-    // UP — start 8× finer than the parallelism and let AQE merge (see the
-    // local() scaladoc note; round 10 moved this into configure() so the
-    // Verify/Bench sessions get it too: the sf1 ppjoin verification plan
-    // depends on it to sort in memory).
+    // AQE coalesces DOWN from the initial partition count but (skew joins
+    // aside) never splits UP — so shuffle.partitions=cores makes every big
+    // shuffle spill once a stage outgrows cores×(executor memory/part).
+    // Start 8× finer and let AQE merge: small SFs coalesce back to ~cores
+    // partitions (measured no-op on the gate), while the sf1 ppjoin
+    // verification shuffle (~850M rows) keeps enough partitions to sort in
+    // memory — its 10×-data cost drops from 16× to near-linear. On a real
+    // cluster this is the same knob the deployment would size to max
+    // concurrent tasks × ~4.
     .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      (sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors.min(32)) * 8).toString)
+      (cores * 8).toString)
 
-  /** Local session for tests / ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32),
-            appName: String = "graft"): SparkSession = {
-    val spark = configure(
-      SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(appName)
-        .config("spark.sql.shuffle.partitions", cores.toString)
-        // AQE coalesces DOWN from the initial partition count but (skew
-        // joins aside) never splits UP — so shuffle.partitions=cores makes
-        // every big shuffle spill once a stage outgrows cores×(executor
-        // memory/part). Start 8× finer and let AQE merge: small SFs
-        // coalesce back to ~cores partitions (measured no-op on the gate),
-        // while the sf1 ppjoin verification shuffle (~850M rows) keeps
-        // enough partitions to sort in memory — its 10×-data cost drops
-        // from 16× to near-linear. On a real cluster this is the same
-        // knob the deployment would size to max concurrent tasks × ~4.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          (cores * 8).toString)
-        // exact thread count beats configure()'s env/availableProcessors
-        // guess for the TopKPerKey budget (see configure scaladoc)
-        .config("spark.graft.topk.rowBudget",
-          math.max(1L << 14, math.min(1L << 20,
-            Runtime.getRuntime.maxMemory / cores / 1024)).toString)
-        .config("spark.ui.enabled", "false"))
+  /** The local session every graft entry point runs on: `local[cores]`,
+    * one shuffle partition per thread, UI off, WARN logging. `confs` are
+    * deployment settings applied last (warehouse/local dirs, a shuffle
+    * partition override). */
+  def session(cores: Int, confs: (String, String)*): SparkSession = {
+    val spark = configure(SparkSession.builder(), cores)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .config(confs.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * Run: sbt "runMain graft.Plans". */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.local(8, "plans")
+    val spark = Engine.session(8)
     val dir = "/root/testdata/sf0.001"
     val headline = Seq(
       "q_scan_project", "q1_agg", "q_join_multi", "q_anti_join",

@@ -1536,81 +1536,6 @@ object VectorOps {
     * the kcorePeelConv idiom on the fifth iterative family. Returns the
     * graph of the stopping round and the 1-based round index at which the
     * threshold first held (= maxRounds when it never did). */
-  /** Dev probe (graft.ProbeDescent): per-round changed-edge counts over
-    * the real corpus, the measurement behind the δ in v_knn_descent_conv.
-    * Lives here for access to the private descent substrate. */
-  def probeDescentChanges(s: SparkSession, dir: String,
-                          maxRounds: Int): Seq[(Int, Long, Long)] = {
-    val e = emb(s, dir)
-      .withColumn("n2", Similarity.decNorm2(col("embedding")))
-      .localCheckpoint()
-    val n = e.count()
-    val nB = math.max(n / 16L, 1L)
-    var cur = knnGraphEdges(s, dir).localCheckpoint()
-    (1 to maxRounds).map { i =>
-      val next = descentRound(e, cur, s"d$i", nB)
-      val changed = next.join(cur, Seq("src", "dst"), "left_anti").count()
-      cur = next
-      (i, changed, n)
-    }
-  }
-
-  /** Dev probe (graft.ProbeDescent): per-round affected-set sizes of the
-    * incremental descent — the measurement behind the batch-cost claim in
-    * v_knn_descent_append's scaladoc and DESIGN.md. */
-  def probeDescentAppend(s: SparkSession, dir: String,
-                         mod: Int = 16): Seq[(Int, Long, Long, Long)] = {
-    val isNew = col("vec_id") >= 256 && pmod(col("vec_id"), lit(mod)) === 7
-    val e = emb(s, dir)
-      .withColumn("n2", Similarity.decNorm2(col("embedding")))
-      .withColumn("is_new", isNew)
-      .localCheckpoint()
-    val n = e.count()
-    val nCells = math.ceil(math.sqrt(n.toDouble)).toInt
-    val aAll = IvfIndex.assignSampled(e, "vec_id", "embedding", nCells)
-      .withColumn("n2", Similarity.decNorm2(col("embedding")))
-      .withColumn("is_new", isNew)
-      .localCheckpoint()
-    val base0 = cellTopkEdges(aAll.filter(!col("is_new"))).localCheckpoint()
-    val affected = aAll.filter(col("is_new")).select("cell").distinct()
-    val t0base = base0.select("src", "dst", "c_raw")
-    val t0full = base0.join(broadcast(affected), Seq("cell"), "left_anti")
-      .unionByName(cellTopkEdges(
-        aAll.join(broadcast(affected), Seq("cell"), "left_semi")))
-      .select("src", "dst", "c_raw")
-      .localCheckpoint()
-    val eB = e.filter(!col("is_new"))
-    val nBfrozen = math.max(eB.count() / 16L, 1L)
-    val newIds = e.filter(col("is_new")).select("vec_id")
-    val nNew = newIds.count()
-    var curBase = t0base
-    var curFull = t0full
-    var changed = diffNodes(t0full, t0base).localCheckpoint()
-    (1 to 3).map { i =>
-      val baseNext = descentRound(eB, curBase, s"d$i", nBfrozen)
-      // reproduce descentRoundIncremental's affected-set arithmetic for
-      // measurement (the method itself keeps A internal)
-      val symF = symEdges(curFull).localCheckpoint()
-      val symB = symEdges(curBase)
-      val sNodes = diffNodes(symF, symB)
-      val secondLeg = symF
-        .join(sNodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src").as("node"))
-      val rb = descentBuckets(e, s"d$i", nBfrozen)
-      val newBuckets = rb.join(newIds, Seq("vec_id"), "left_semi")
-        .select("bk").distinct()
-      val probeAffected = rb
-        .join(broadcast(newBuckets), Seq("bk"), "left_semi")
-        .select(col("vec_id").as("node"))
-      val aCount = sNodes.union(secondLeg).union(probeAffected)
-        .union(changed).distinct().count()
-      val (nf, ch) = descentRoundIncremental(e, newIds, s"d$i", nBfrozen,
-        curFull, curBase, baseNext, changed)
-      curBase = baseNext; curFull = nf; changed = ch
-      (i, aCount, n, nNew)
-    }
-  }
-
   private def nnDescentConv(e: DataFrame, base: DataFrame, maxRounds: Int,
                             nB: Long, thr: Long): (DataFrame, Int) = {
     var cur = base

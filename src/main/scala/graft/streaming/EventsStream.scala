@@ -243,7 +243,11 @@ object EventsStream {
     * event-time-ordered parquet files plus the given sentinel batches,
     * pinned to increasing synthetic mtimes, and stream them back one file
     * per trigger. `sentinels(maxUs)` returns one DataFrame per extra
-    * sentinel micro-batch, schema-identical to `batch`. */
+    * sentinel micro-batch, schema-identical to `batch`. Chunks follow
+    * event-time order, but rows WITHIN a chunk come in shuffle-fetch
+    * order, not scan order: consumers must not depend on it. The scratch
+    * dirs the chunks are cut in are removed before returning, so the
+    * staging root holds only `stream/`. */
   private def stageChunkedReplay(spark: SparkSession, batch: DataFrame,
       nChunks: Int, sentinels: Long => Seq[DataFrame]): (String,
       org.apache.spark.sql.types.StructType, DataFrame) = {
@@ -304,6 +308,10 @@ object EventsStream {
     sentinels(maxUs).zipWithIndex.foreach { case (df, j) =>
       stage(df, nChunks + j)
     }
+    // every streamed part file is in stream/ now; chunks/ and stage_*/
+    // hold only the writes' leftovers
+    root.toFile.listFiles().filter(_.getName != "stream")
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     (streamDir.toString, batch.schema,
       readStagedReplay(spark, streamDir.toString, batch.schema))
   }

@@ -7,18 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites, with an isolated temp warehouse
   * so managed-table tests (rpt catalog) never touch real data. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("graft-warehouse").toString
-    val s = Engine.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Engine.session(4,
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft-warehouse").toString)
 
   def fixture(name: String): String =
     s"${graft.pipeline.Fixtures.dir}/$name"

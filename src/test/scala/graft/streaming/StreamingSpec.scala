@@ -239,4 +239,18 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy("user_id").agg(count(lit(1)).as("n_events"))
     assert(finals.except(batch).count() == 0 && batch.except(finals).count() == 0)
   }
+
+  test("chunked replay staging leaves only stream/ under its root") {
+    val (path, _) = EventsStream.stageEventsChunkedReplayFull(spark, dir, 4)
+    val root = new java.io.File(path).getParentFile
+    try {
+      assert(root.list().toSeq == Seq("stream"), root.list().mkString(", "))
+      // 4 event-time chunks + 2 sentinel files, every real row staged once
+      // plus one 'click' and one 'error' row per sentinel
+      assert(new java.io.File(path).list().count(_.endsWith(".parquet")) == 6)
+      val real = Tables.load(spark, dir, "events")
+        .filter(col("user_id").isNotNull && col("ts").isNotNull).count()
+      assert(spark.read.parquet(path).count() == real + 4)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
 }
