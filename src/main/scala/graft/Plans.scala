@@ -94,7 +94,9 @@ object Plans {
       "g_kcore_conv", "v_knn_descent", "v_knn_graph_append", "q_kmv_reagg",
       // round 12: convergence-terminated descent and the incremental
       // descent-after-append (the lifecycle's write path)
-      "v_knn_descent_conv", "v_knn_descent_append")
+      "v_knn_descent_conv", "v_knn_descent_append",
+      // the graph family on the one superstep driver: the fixpoint BFS
+      "g_bfs_conv")
 
     // per-query "why this is the 100× plan" — rendered above the plan block
     val notes: Map[String, String] = Map(
@@ -107,10 +109,19 @@ object Plans {
         "degree HISTOGRAM (dozens of rows), not a global row_number sort " +
         "over all nodes; the co-order projection carries the fan-out cap " +
         "(32) so one mega-order can never mint a quadratic join bucket."),
-      "g_kcore_conv" -> ("100× plan: identical delta-peel rounds; the " +
-        "convergence probe is a frontier COUNT per round (an integer on " +
-        "the node-sized frame), so termination costs one map-side-" +
-        "combined aggregate — no extra edge pass; state O(nodes)."),
+      "g_kcore_conv" -> ("100× plan: identical delta-peel rounds on " +
+        "Superstep; the convergence probe counts the NEXT round's " +
+        "frontier (degrees below k, an integer on the node-sized frame) " +
+        "with observe() on the round's own checkpoint — no extra job, no " +
+        "extra edge pass; state O(nodes). The round that would remove " +
+        "nothing is never run."),
+      "g_bfs_conv" -> ("100× plan: the g_bfs relaxation (edges⋈distances " +
+        "key-equality merge join against the u-staged edge cache + a " +
+        "map-side-combined min) carrying each node's previous distance " +
+        "as a column; the changed-node count is observed on the round's " +
+        "own checkpoint, so the fixpoint test costs no job and no join. " +
+        "Rounds stop at 3 at every SF (cap 5); the plan below is the " +
+        "stopping round's checkpoint scan."),
       "v_knn_descent" -> ("100× plan: per round the candidate frame is " +
         "two-hop pairs of the rev-capped (≤2k per node) edge list ∪ " +
         "current edges ∪ ~16-vector random-bucket pairs — O(N·k² + N·b) " +
@@ -572,14 +583,15 @@ object Plans {
         "round's shape, not iterations² — memory and plan size stay O(1) " +
         "in round count."),
       "g_pagerank" -> ("100× plan: one iteration = contributions join " +
-        "(key-equality on src) + decimal-exact sum by dst + broadcast " +
-        "teleport scalar. Round 12: the adjacency layout AND join " +
-        "strategy are picked ONCE per corpus from the node count " +
-        "(PageRank.stageOut) — broadcast regime below ~4M nodes (pinned " +
-        "build side = ranks), staged-merge regime above it (EdgeLayout " +
+        "(key-equality on src) + decimal-exact sum by dst + the teleport " +
+        "term from the node frame's seed indicator. The adjacency layout " +
+        "AND join strategy are picked ONCE per corpus from the node count " +
+        "(EdgeLayout.picked) — broadcast regime up to 4M nodes (pinned " +
+        "build side = ranks), staged-merge regime above it (the staged " +
         "cache, only the rank frame moves per round) — because with no " +
-        "shuffle stage under the join AQE cannot re-plan it; the plan " +
-        "below is the final iteration's shape."),
+        "shuffle stage under the join AQE cannot re-plan it. The fixed " +
+        "rounds run on Superstep's lazy mode (a checkpoint every 8 " +
+        "rounds, never the last), so the plan below is all 3 rounds."),
       "t_curate" -> ("100× plan: exact-dedup survivors (hash groupBy " +
         "argmin), language vote, and the token-window filter compose into " +
         "ONE declarative plan — every stage shuffles on the same doc key " +
@@ -780,10 +792,10 @@ object Plans {
       "g_pagerank_conv" -> ("100× plan: the convergence idiom on the " +
         "second iterative family — per round the audited g_pagerank " +
         "shape (edge×rank key-equality join + decimal-exact dst sum, " +
-        "edge-sized shuffles) plus ONE driver scalar: the max relative " +
-        "rank movement, a node-cardinality join collapsed to one row. " +
-        "Ranks localCheckpoint every round (each frame is consumed " +
-        "twice: movement probe + next round), lineage O(1). Rounds are " +
+        "edge-sized shuffles) carrying the previous rank as a column; " +
+        "the max relative rank movement is observed on the round's own " +
+        "checkpoint (Superstep), so the probe costs no job and no join, " +
+        "and lineage stays O(1). Rounds are " +
         "data-dependent (sf0.001→4, sf0.01/0.1→5, cap 6 never hit) and " +
         "stop_round puts the termination decision under the hash gate. " +
         "The audited plan below is the stopping round's checkpoint + " +

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Distributed connected components over an undirected edge list —
   * the step that turns near-duplicate PAIRS (LSH/SimHash candidates) into
@@ -30,6 +31,13 @@ object Components {
   /** Labels every node that appears in `pairs` with the minimum node id
     * reachable from it. Returns (node, comp); singletons (docs in no pair)
     * are not rows — they are their own component by definition.
+    *
+    * Convergence probe, for any orderable id type (numeric ids, string
+    * entities from ER, composite keys): each round carries every node's
+    * previous label as a column and counts the nodes whose label changed,
+    * observed on the round's own checkpoint — no second scan or join.
+    * Labels only ever decrease (new = min(old, neighbors)), so zero
+    * changes IS the fixpoint.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIters: Int = 30): DataFrame = {
@@ -39,53 +47,21 @@ object Components {
       .localCheckpoint()
     // seed with the neighborhood minimum instead of the node itself —
     // equivalent to (and one shuffle round cheaper than) starting from
-    // identity labels and propagating once
-    var labels = edges.groupBy("src").agg(min("dst").as("min_nb"))
+    // identity labels and propagating once; the seed has no previous label
+    val noLabel = lit(null).cast(edges.schema("src").dataType).as("prev")
+    val init = edges.groupBy("src").agg(min("dst").as("min_nb"))
       .select(col("src").as("node"),
-        least(col("src"), col("min_nb")).as("comp"))
-      .localCheckpoint()
-    // Convergence probe, by label type:
-    //  - numeric ids: per-node labels only ever decrease (new = min(old,
-    //    neighbors)), so the global label sum is strictly monotone until
-    //    fixpoint — an unchanged decimal(38,0) sum IS convergence, one
-    //    1-row aggregate per round (a long sum could overflow on huge
-    //    graphs with large ids, silently faking (non-)convergence);
-    //  - any other orderable type (string entities from ER, composite
-    //    keys): no arithmetic exists, so convergence is an exact per-node
-    //    change-detection join — one extra bounded job per round, same
-    //    asymptotics.
-    val numericIds = labels.schema("comp").dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      import org.apache.spark.sql.types.DecimalType
-      df.agg(coalesce(sum(col("comp").cast(DecimalType(38, 0))),
-        lit(java.math.BigDecimal.ZERO))).first().getDecimal(0)
+        least(col("src"), col("min_nb")).as("comp"), noLabel)
+    val res = Superstep.run(init, maxIters, Some(Superstep.Probe(
+        count(when(!(col("comp") <=> col("prev")), 1)), _ == 0L))) { labels =>
+      edges.join(labels.select(col("node").as("src"), col("comp")), "src")
+        .select(col("dst").as("node"), col("comp"), noLabel)
+        .union(labels.select(col("node"), col("comp"), col("comp").as("prev")))
+        .groupBy("node").agg(min("comp").as("comp"), max("prev").as("prev"))
     }
-    def unchanged(cur: DataFrame, next: DataFrame): Boolean =
-      next.as("n").join(cur.as("p"), "node")
-        .filter(!(col("n.comp") <=> col("p.comp")))
-        .head(1).isEmpty
-    var prevSum = if (numericIds) labelSum(labels) else null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val next = edges
-        .join(labels.select(col("node").as("src"), col("comp")), "src")
-        .select(col("dst").as("node"), col("comp"))
-        .union(labels)
-        .groupBy("node").agg(min("comp").as("comp"))
-        .localCheckpoint()
-      if (numericIds) {
-        val s = labelSum(next)
-        converged = s == prevSum
-        prevSum = s
-      } else converged = unchanged(labels, next)
-      labels = next
-      iter += 1
-    }
-    require(converged,
+    require(res.converged,
       s"connectedComponents did not converge in $maxIters rounds")
-    labels
+    res.last.select("node", "comp")
   }
 
   /** Same labeling as [[connectedComponents]] via the alternating
@@ -136,37 +112,29 @@ object Components {
       rewired.filter(col("src") =!= col("dst")).distinct()
     }
 
-    // order-independent fingerprint of the edge set: converged when stable
-    // (decimal accumulation — a long sum of 64-bit hashes overflows ANSI)
-    def fingerprint(edges: DataFrame): (Long, java.math.BigDecimal) = {
-      import org.apache.spark.sql.types.DecimalType
-      val r = edges.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("src"), col("dst")).cast(DecimalType(38, 0))),
-          lit(java.math.BigDecimal.ZERO))).first()
-      (r.getLong(0), r.getDecimal(1))
-    }
-
     // nodes come from the RAW pairs: a self-loop-only node must still get
     // a (node, node) label row, exactly as propagation labels it
     val raw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val nodes = raw.select(col("src").as("node"))
       .union(raw.select(col("dst").as("node"))).distinct().localCheckpoint()
-    var edges = raw.filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint()
-    var prev = fingerprint(edges)
-    var converged = edges.isEmpty
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      edges = smallStar(largeStar(edges)).localCheckpoint()
-      val fp = fingerprint(edges)
-      converged = fp == prev
+    // order-independent fingerprint of the edge set, observed on each
+    // round's checkpoint: converged when stable, or at once when empty
+    // (decimal accumulation — a long sum of 64-bit hashes overflows ANSI)
+    var prev: Any = null
+    val fingerprint = Superstep.Probe(struct(count(lit(1)),
+      coalesce(sum(xxhash64(col("src"), col("dst")).cast(DecimalType(38, 0))),
+        lit(java.math.BigDecimal.ZERO))), { fp =>
+      val done = if (prev == null) fp.asInstanceOf[Row].getLong(0) == 0L
+                 else fp == prev
       prev = fp
-      iter += 1
-    }
-    require(converged,
+      done
+    })
+    val res = Superstep.run(raw.filter(col("src") =!= col("dst")).distinct(),
+      maxIters, Some(fingerprint))(edges => smallStar(largeStar(edges)))
+    require(res.converged,
       s"connectedComponentsStars did not converge in $maxIters rounds")
     // fixpoint edges are stars (node -> component min); roots label themselves
-    nodes.join(edges.select(col("src").as("node"), col("dst").as("comp")),
+    nodes.join(res.last.select(col("src").as("node"), col("dst").as("comp")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
   }

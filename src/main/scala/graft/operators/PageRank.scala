@@ -11,20 +11,22 @@ import org.apache.spark.sql.types.DecimalType
   * frontier prioritization), complementing the content-quality signals in
   * [[graft.queries.TextOps]].
   *
-  * Non-normalized damped formulation: rank' = (1-d) + d * Σ rank(in)/deg(in),
-  * all nodes seeded at 1.0. Callers that need dangling-mass conservation
-  * should symmetrize or self-loop their edges first (the declared query
-  * symmetrizes, so every node has out-degree >= 1).
+  * Non-normalized damped formulation with a teleport indicator e(v):
+  * rank' = (1-d)·e(v) + d·Σ rank(in)/deg(in), rank0 = e. Plain PageRank
+  * seeds every node (e ≡ 1.0, and (1-d)·1.0 is exactly (1-d) in IEEE);
+  * PERSONALIZED PageRank (Haveliwala, WWW'02; random walk with restart)
+  * seeds a set, so ranks are walk-proximity to it. Callers that need
+  * dangling-mass conservation should symmetrize or self-loop their edges
+  * first (the declared queries symmetrize, so every node has out-degree
+  * >= 1).
   *
   * Scale posture (the same contract as [[Components]]):
-  *  - each iteration is ONE shuffle join (static out-degree-annotated edges
-  *    x current ranks on src) + ONE aggregation on dst — cost is
+  *  - each iteration is ONE join (static out-degree-annotated edges x
+  *    current ranks on src) + ONE aggregation on dst — cost is
   *    O(|E|/cluster) per round, never all-pairs, no driver-side state;
-  *  - the static edge+degree frame's layout and the per-round join
-  *    strategy are picked ONCE per corpus from the node count (broadcast
-  *    regime vs staged-merge regime — see [[stageOut]]), and ranks are
-  *    lineage-truncated every `checkpointEvery` rounds so the iterative
-  *    plan stays O(1) instead of doubling per round;
+  *  - the edge frame's layout and the per-round join strategy are picked
+  *    ONCE per corpus from the node count ([[EdgeLayout.picked]]), and the
+  *    rounds run on [[Superstep]];
   *  - per-node contribution sums accumulate in DECIMAL(28,18) — exact and
   *    order-independent, so the result is bit-identical regardless of
   *    partitioning (each term is one IEEE double division of identical
@@ -32,77 +34,21 @@ import org.apache.spark.sql.types.DecimalType
   */
 object PageRank {
 
-  /** Regime pick for the per-round adjacency⋈ranks join, made ONCE per
-    * corpus from the actual node count — the operator's own CBO choice.
-    * Why the operator decides: with a cached/checkpointed build side and
-    * a checkpointed probe side there is no shuffle stage under the join,
-    * so AQE never gets to re-plan it, and the static planner — seeing
-    * exact stats only for the cached side — can pick the pathological
-    * build side (broadcast the EDGE frame; measured 17 s/step on the
-    * g_walks probe before the fix).
-    *
-    * BROADCAST regime (node frame fits an executor; 4M rows ≈ 200 MB
-    * hashed — the knob is executor memory): the edge frame is only
-    * lineage-truncated (localCheckpoint), because a broadcast join
-    * streams it with no exchange regardless of layout — paying the
-    * staged layout's shuffle+sort+cache build (~7 s at sf1, measured)
-    * buys nothing at 3 rounds.
-    *
-    * MERGE regime (|V| too big to broadcast — the 100 TB shape): the
-    * edge frame is STAGED (EdgeLayout: partitioned+sorted by src,
-    * persisted) and every round merge-joins against it co-located, so
-    * only the node-sized rank frame moves per round. */
-  private case class RanksJoin(out: DataFrame, broadcastRegime: Boolean) {
-    def apply(ranksAsSrc: DataFrame): DataFrame =
-      if (broadcastRegime) out.join(broadcast(ranksAsSrc), "src")
-      else out.hint("merge").join(ranksAsSrc, "src")
-    /** Broadcast regime: the adjacency is a plain checkpoint — return the
-      * rank frame LAZY, exactly the pre-staging contract. Merge regime:
-      * materialize the node-sized result so the persisted cache can be
-      * released before the caller consumes it. */
-    def finish(ranks: DataFrame): DataFrame =
-      if (broadcastRegime) ranks
-      else { val r = ranks.localCheckpoint(); out.unpersist(false); r }
-  }
-  /** `annotated` must already be checkpointed (the broadcast-regime
-    * frame); the merge regime restages FROM that checkpoint, so the
-    * extra pass reads memory, not the source scan. */
-  private def stageOut(annotated: DataFrame, nodeCount: Long): RanksJoin = {
-    val broadcastRegime = nodeCount <= 4000000L
-    if (broadcastRegime) RanksJoin(annotated, true)
-    else RanksJoin(EdgeLayout.stageByKey(annotated, "src"), false)
-  }
-
   /** Ranks after `iters` rounds: (node, rank). `edges` is directed
     * (srcCol -> dstCol); duplicate edges count once per occurrence, so pass
     * a distinct frame for simple-graph semantics. Nodes with no in-edges
     * hold the teleport floor (1-d). */
   def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-          damping: Double = 0.85, checkpointEvery: Int = 8): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // static across iterations: every edge annotated with its source
-    // degree, lineage-truncated once; the merge regime restages it
-    val out0 = e.join(deg, "src").localCheckpoint()
-    val nodes = out0.select(col("src").as("node"))
-      .union(out0.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val jr = stageOut(out0, nodes.count())
-    var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-    for (i <- 1 to iters) {
-      val contrib = jr(ranks.select(col("node").as("src"), col("rank")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum((col("rank") / col("deg"))
-          .cast(DecimalType(28, 18))).as("in_sum"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) *
-            coalesce(col("in_sum").cast("double"), lit(0.0))).as("rank"))
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
-    }
-    jr.finish(ranks)
-  }
+          damping: Double = 0.85): DataFrame =
+    iterate(edges, srcCol, dstCol, None, iters, None, damping)._1
+
+  /** PageRank restarting at `seeds`, a 1-column frame of node ids — joined,
+    * never collected (the seed set can be millions of rows at 100 TB).
+    * Non-seed nodes start at 0 and acquire mass only through in-edges. */
+  def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
+                      seeds: DataFrame, iters: Int,
+                      damping: Double = 0.85): DataFrame =
+    iterate(edges, srcCol, dstCol, Some(seeds), iters, None, damping)._1
 
   /** CONVERGENCE-terminated PageRank — iterate until the max RELATIVE
     * per-node rank movement drops below `relEps` (strict <), capped at
@@ -113,104 +59,57 @@ object PageRank {
     * teleport floor, so no absolute threshold fits both. The max-relative
     * movement decays geometrically at ~the damping factor, so the
     * threshold maps deterministically to a data-dependent round count.
-    *
-    * Determinism contract (the v_kmeans_conv idiom): each round's ranks
-    * are doubles from identical decimal-exact contribution sums, bit-equal
-    * across engines; the movement is IEEE subtract/abs/divide + an
-    * order-independent max over those identical doubles (never re-rounded
-    * through decimal), so both engines compute the identical stopping
-    * round. Per round the driver receives ONE scalar (the movement max —
-    * a node-cardinality join collapsed to one row); everything row-shaped
-    * stays distributed.
-    *
-    * The movement probe rides IN the assignment frame: the new ranks are
-    * joined from the PREVIOUS ranks frame (same node set — the symmetrized
-    * graph's node set is round-invariant), so `prev` is carried as a column
-    * and the probe is a scan of the just-checkpointed frame instead of a
-    * second node-sized join + job per round. The checkpoint is LAZY: the
-    * movement aggregate is the action that materializes it, so each round
-    * runs exactly one job. */
+    * Determinism (the v_kmeans_conv idiom): the movement is IEEE
+    * subtract/abs/divide + an order-independent max over bit-identical
+    * doubles, so both engines stop at the same round. Each round carries
+    * the previous rank as a column (the node set is round-invariant on a
+    * symmetrized graph), and the movement is observed on the round's own
+    * checkpoint — no second join, no extra job. */
   def runConverged(edges: DataFrame, srcCol: String, dstCol: String,
                    maxIters: Int, relEps: Double,
-                   damping: Double = 0.85): (DataFrame, Int) = {
-    require(maxIters >= 1, "maxIters must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val out0 = e.join(deg, "src").localCheckpoint()
-    val nodes = out0.select(col("src").as("node"))
-      .union(out0.select(col("dst").as("node"))).distinct()
-    var ranks = nodes.select(col("node"), lit(1.0).as("rank")).localCheckpoint()
-    val jr = stageOut(out0, ranks.count())
-    var r = 0
-    var stopped = false
-    while (r < maxIters && !stopped) {
-      r += 1
-      val contrib = jr(ranks.select(col("node").as("src"), col("rank")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum((col("rank") / col("deg"))
-          .cast(DecimalType(28, 18))).as("in_sum"))
-      // prev ranks hold every node (round-invariant node set), so the left
-      // join against contrib both produces the new rank AND carries the
-      // previous one for the movement probe — no separate join.
-      val next = ranks.select(col("node"), col("rank").as("pr"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) *
-            coalesce(col("in_sum").cast("double"), lit(0.0))).as("rank"),
-          col("pr"))
-        .localCheckpoint(false)
-      // prev rank >= the teleport floor (1-d) > 0 — the divide is safe
-      val move = next
-        .agg(max(abs(col("rank") - col("pr")) / col("pr")))
-        .first().getDouble(0)
-      if (move < relEps) stopped = true
-      ranks = next.select("node", "rank")
-    }
-    // every round's ranks frame is checkpointed, so nothing recomputes
-    // through the cache after release
-    (jr.finish(ranks), r)
-  }
+                   damping: Double = 0.85): (DataFrame, Int) =
+    iterate(edges, srcCol, dstCol, None, maxIters, Some(relEps), damping)
 
-  /** PERSONALIZED PageRank (Haveliwala, WWW'02; the random-walk-with-restart
-    * form): the teleport mass lands on a SEED SET instead of uniformly —
-    * rank' = (1-d)·e(v) + d·Σ rank(in)/deg(in) with e(v) ∈ {0,1} the seed
-    * indicator, rank0 = e. The result is the restart-biased visit rate a
-    * training-data pipeline uses to expand a trusted-source whitelist into
-    * a crawl/sampling frontier ("sources similar to these").
-    *
-    * `seeds` is a 1-column frame of seed node ids — joined, never collected
-    * (the seed set can be millions of rows at 100 TB). Same decimal-exact
-    * contribution contract as [[run]]; e(v) is exactly 0.0/1.0 so the outer
-    * chain (1-d)*e + d*double(in_sum) is a fixed IEEE sequence. Non-seed
-    * nodes start at 0 and acquire mass only through in-edges, so ranks are
-    * walk-proximity to the seed set. Cost: identical to [[run]] — one
-    * edge-sized join + one aggregation per round. */
-  def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
-                      seeds: DataFrame, iters: Int,
-                      damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
+  private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
+                      seeds: Option[DataFrame], maxIters: Int,
+                      relEps: Option[Double], damping: Double): (DataFrame, Int) = {
+    require(maxIters >= 1, "iters must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val sd = seeds.toDF("node").withColumn("e", lit(1.0))
+    // static across iterations: every edge annotated with its source
+    // degree, lineage-truncated once; the merge regime restages it
     val out0 = e.join(deg, "src").localCheckpoint()
-    val nodes = out0.select(col("src").as("node"))
+    val ids = out0.select(col("src").as("node"))
       .union(out0.select(col("dst").as("node"))).distinct()
-      .join(sd, Seq("node"), "left")
-      .select(col("node"), coalesce(col("e"), lit(0.0)).as("e"))
-      .localCheckpoint()
-    val jr = stageOut(out0, nodes.count())
-    var ranks = nodes.select(col("node"), col("e").as("rank"))
-    for (i <- 1 to iters) {
-      val contrib = jr(ranks.select(col("node").as("src"), col("rank")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum((col("rank") / col("deg"))
-          .cast(DecimalType(28, 18))).as("in_sum"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("e") + lit(damping) *
-            coalesce(col("in_sum").cast("double"), lit(0.0))).as("rank"))
-      if (i % 8 == 0 && i < iters) ranks = ranks.localCheckpoint()
+    val nodes = seeds.fold(ids.withColumn("e", lit(1.0))) { sd =>
+      ids.join(sd.toDF("node").withColumn("e", lit(1.0)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("e"), lit(0.0)).as("e"))
+    }.localCheckpoint()
+    EdgeLayout.picked(out0, "src", nodes.count()) { adj =>
+      def step(ranks: DataFrame): DataFrame = {
+        val contrib = adj.join(ranks.select(col("node").as("src"), col("rank")))
+          .groupBy(col("dst").as("node"))
+          .agg(sum((col("rank") / col("deg"))
+            .cast(DecimalType(28, 18))).as("in_sum"))
+        val base = if (relEps.isEmpty) nodes
+          else ranks.select(col("node"), col("e"), col("rank").as("pr"))
+        base.join(contrib, Seq("node"), "left")
+          .withColumn("rank", lit(1.0 - damping) * col("e") + lit(damping) *
+            coalesce(col("in_sum").cast("double"), lit(0.0)))
+          .drop("in_sum")
+      }
+      // prev rank >= the teleport floor (1-d) > 0, so the divide is safe;
+      // round 0 has no previous rank and a null movement
+      val probe = relEps.map(eps => Superstep.Probe(
+        max(abs(col("rank") - col("pr")) / col("pr")),
+        m => m != null && m.asInstanceOf[Double] < eps))
+      val init = nodes.withColumn("rank", col("e"))
+      val res = Superstep.run(
+        if (probe.isEmpty) init else init.withColumn("pr", lit(null).cast("double")),
+        maxIters, probe, lazyPlan = probe.isEmpty)(step)
+      // a lazy result must not read the staged cache after its release
+      val ranks = res.last.select("node", "rank")
+      (if (adj.staged && probe.isEmpty) ranks.localCheckpoint() else ranks, res.rounds)
     }
-    jr.finish(ranks)
   }
 }

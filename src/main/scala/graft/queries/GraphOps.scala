@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.PageRank
+import graft.operators.{EdgeLayout, PageRank, Superstep}
 
 /** Graph analytics over the supplier–part co-occurrence graph derived from
   * `lineitem` — the iterative-algorithm surface beyond connected components
@@ -34,21 +34,19 @@ object GraphOps {
       .select((col("l_suppkey") * 2).as("src"),
               (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
-    // NOT checkpointed here: PageRank.run/runConverged checkpoint their
-    // degree-annotated copy, so a checkpoint here would double-materialize
-    // for that family; multi-consumer callers (g_lpa, g_modularity)
-    // checkpoint at the call site (the g_kcore/g_bfs `sym` lesson).
+    // NOT checkpointed here: PageRank checkpoints its degree-annotated
+    // copy and the other families stage it ([[EdgeLayout]]), so a
+    // checkpoint here would double-materialize.
     e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** Synchronous deterministic LPA over [[longEdges]]: per round one
-    * edge-sized join + two map-side-combined hash aggregates (the
-    * max(struct(cnt, -label)) argmax; ties → smallest label), O(1)
-    * lineage via localCheckpoint. Shared by g_lpa and g_modularity. */
-  private def lpaLabels(e: DataFrame, rounds: Int): DataFrame = {
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (_ <- 1 to rounds) {
+  /** Synchronous deterministic LPA over the src-staged [[longEdges]]:
+    * per round one edge-sized join + two map-side-combined hash aggregates
+    * (the packed-decimal argmax below; ties → smallest label), on
+    * [[Superstep]]. Shared by g_lpa and g_modularity. */
+  private def lpaLabels(e: EdgeLayout.Adjacency, rounds: Int): DataFrame =
+    Superstep.run(e.edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), rounds) { labels =>
       // the per-node argmax rides ONE packed DECIMAL(38,0) —
       // cnt·2^63 + (2^63-1 − label) — numerically ≡ the lexicographic
       // (cnt, −label) order for the non-negative long labels this family
@@ -57,7 +55,7 @@ object GraphOps {
       // a SortAggregate that SORTED the (node,label)-pair frame every
       // round; the decimal max is a plain HashAggregate. The ordering is
       // identical, so hashes (and the join-based oracle) are unchanged.
-      labels = e.hint("merge").join(labels, e("src") === labels("node"))
+      e.join(labels.withColumnRenamed("node", "src"))
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
@@ -66,10 +64,7 @@ object GraphOps {
         .select(col("dst").as("node"),
           expr("9223372036854775807 - " +
             "cast(m % 9223372036854775808 as bigint)").as("label"))
-        .localCheckpoint()
-    }
-    labels
-  }
+    }.last
 
   /** Symmetrized distinct supplier–part edges: s<k> <-> p<k>. */
   private def edges(s: SparkSession, dir: String): DataFrame = {
@@ -118,68 +113,121 @@ object GraphOps {
     * edges⋈frontier join (broadcast when the frontier is small — AQE
     * picks it), (c) drops zero-degree nodes (they vanish from s_i in the
     * materialized-edge formulation, so dropping is the same semantics).
-    * k is the exact-rank p10 degree, computed from a DEGREE HISTOGRAM
-    * (distinct degree values — dozens of rows) instead of a global
-    * row_number over all nodes: the d at rank ceil(n/10) is determined by
-    * the degree multiset alone, so the node tie-break the oracle's
-    * row_number uses cannot change it, and the O(n) single-task sort is
-    * gone — at 100 TB the histogram is the only scalable formulation.
-    * Equivalence with the oracle's materialized-edge peel: round i
-    * removes exactly the nodes whose degree in s_{i-1} is < k; an edge of
-    * s_{i-1} from a live node u to a frontier node v is by construction
-    * still alive, so the s0-based decrement count equals the s_{i-1}
-    * degree drop. Output = final degrees of the surviving nodes (≥ 1). */
-  private def kcorePeel(e: DataFrame, rounds: Int): DataFrame =
-    kcorePeelImpl(e, rounds, convergence = false, rankDiv = 10)
-      .select(col("node"), col("core_deg"))
-
-  /** Convergence-terminated peel: rounds run until one removes NOTHING (a
-    * pure-integer frontier-emptiness test), capped at `maxRounds`; the
-    * detected stopping round rides out as `stop_round` under the hash
-    * gate — the fourth family on the convergence idiom (v_kmeans_conv,
-    * g_pagerank_conv, g_bfs_conv). */
-  private def kcorePeelConv(e: DataFrame, maxRounds: Int): DataFrame =
-    kcorePeelImpl(e, maxRounds, convergence = true, rankDiv = 50)
-
-  /** @param rankDiv k = the exact-rank ceil(n/rankDiv)-th smallest degree.
-    *   The fixed-round peel uses p10 (rankDiv 10 — the cascade is still
-    *   shrinking at round 4, which is that contract's point); the
-    *   convergence variant uses p02 (rankDiv 50): p10 is ABOVE this dense
-    *   graph's degeneracy, so its fixpoint is the empty core — p02 lands
-    *   between min degree and degeneracy and converges to a NONEMPTY core
-    *   in 2-4 rounds at every SF (measured in the round-11 DuckDB probe). */
-  private def kcorePeelImpl(e: DataFrame, rounds: Int,
-                            convergence: Boolean, rankDiv: Int): DataFrame = {
+    * k is the exact-rank ceil(n/rankDiv)-th smallest degree, computed from
+    * a DEGREE HISTOGRAM (distinct degree values — dozens of rows) instead
+    * of a global row_number over all nodes: the d at that rank is
+    * determined by the degree multiset alone, so the node tie-break the
+    * oracle's row_number uses cannot change it, and the O(n) single-task
+    * sort is gone — at 100 TB the histogram is the only scalable
+    * formulation. Equivalence with the oracle's materialized-edge peel:
+    * round i removes exactly the nodes whose degree in s_{i-1} is < k; an
+    * edge of s_{i-1} from a live node u to a frontier node v is by
+    * construction still alive, so the s0-based decrement count equals the
+    * s_{i-1} degree drop. Output = final degrees of the surviving nodes
+    * (≥ 1).
+    *
+    * Fixed rounds (g_kcore) use p10 (rankDiv 10 — the cascade is still
+    * shrinking at round 4, which is that contract's point). With
+    * `converge` (g_kcore_conv) rounds run until one removes NOTHING (a
+    * pure-integer frontier-emptiness test), capped at `rounds`, and the
+    * stopping round rides out as `stop_round` under the hash gate; that
+    * variant uses p02 (rankDiv 50): p10 is ABOVE this dense graph's
+    * degeneracy, so its fixpoint is the empty core — p02 lands between min
+    * degree and degeneracy and converges to a NONEMPTY core in 2-4 rounds
+    * at every SF (measured in the round-11 DuckDB probe). */
+  private def kcorePeel(e: DataFrame, rounds: Int,
+                        converge: Boolean = false): DataFrame = {
+    val rankDiv = if (converge) 50 else 10
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint()
-    var deg = sym.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
-    val hist = deg.groupBy("d").agg(count(lit(1)).as("cnt"))
-    val kRow = hist
+    val deg0 = sym.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
+    val hist = deg0.groupBy("d").agg(count(lit(1)).as("cnt"))
+    val k = hist
       .withColumn("cum", sum("cnt").over(Window.orderBy("d")))
       .crossJoin(broadcast(hist.agg(sum("cnt").as("n")))) // 1-row stat frame
       .filter(col("cum") >= expr(s"(n + ${rankDiv - 1}) DIV $rankDiv"))
-      .agg(min("d").as("k"))
-      .localCheckpoint()
-    var r = 0
-    var stopped = false
-    while (r < rounds && !stopped) {
-      r += 1
-      val frontier = deg.crossJoin(broadcast(kRow)) // 1-row k frame
-        .filter(col("d") < col("k")).select("u").localCheckpoint()
-      if (convergence && frontier.count() == 0L) stopped = true
-      else {
-        val dec = sym.join(frontier.withColumnRenamed("u", "v"), Seq("v"))
-          .groupBy("u").agg(count(lit(1)).as("dec"))
-        deg = deg.join(frontier, Seq("u"), "left_anti")
-          .join(dec, Seq("u"), "left")
-          .select(col("u"),
-            (col("d") - coalesce(col("dec"), lit(0L))).as("d"))
-          .filter(col("d") >= 1)
-          .localCheckpoint()
+      .agg(min("d")).first().getAs[java.lang.Long](0)
+    // the NEXT round's frontier is empty: observed on this round's degrees,
+    // so the round that would remove nothing is never run
+    val settled = Superstep.Probe(count(when(col("d") < k, 1)), _ == 0L)
+    val res = Superstep.run(deg0, rounds, Option.when(converge)(settled)) { deg =>
+      val dec = sym.join(deg.filter(col("d") < k).select(col("u").as("v")), "v")
+        .groupBy("u").agg(count(lit(1)).as("dec"))
+      deg.filter(col("d") >= k).join(dec, Seq("u"), "left")
+        .select(col("u"), (col("d") - coalesce(col("dec"), lit(0L))).as("d"))
+        .filter(col("d") >= 1)
+    }
+    val out = res.last.select(col("u").as("node"), col("d").as("core_deg"))
+    if (!converge) out
+    else out.withColumn("stop_round", lit(math.min(res.rounds + 1, rounds)))
+  }
+
+  /** Multi-source BFS distance labeling over the u-staged symmetric
+    * co-order graph (fan-out-capped at 32 — non-binding here, the 100 TB
+    * skew guard, see coOrderPairs), from the seeds partkey % 100 == 0.
+    * One relaxation per round: dist_i(v) = min(dist_{i-1}(v), 1 + min over
+    * in-edges) — ONE key-equality join + ONE map-side-combined min agg,
+    * pure integer, no FP at all. Each round carries every node's previous
+    * distance, so with `converge` the count of changed nodes is observed
+    * on the round's own checkpoint and zero stops the loop. */
+  private def bfs(s: SparkSession, dir: String, rounds: Int,
+                  converge: Boolean): Superstep.Rounds = {
+    val e = coOrderPairs(s, dir, cap = 32)
+    val noDist = lit(null).cast("int").as("prev")
+    EdgeLayout.staged(
+        e.union(e.select(col("v").as("u"), col("u").as("v"))), "u") { sym =>
+      val seeds = sym.edges.select(col("u")).distinct()
+        .filter(col("u") % 100 === 0)
+        .select(col("u").as("node"), lit(0).as("dist"), noDist)
+      val changed = Superstep.Probe(
+        count(when(!(col("dist") <=> col("prev")), 1)), _ == 0L)
+      Superstep.run(seeds, rounds, Option.when(converge)(changed)) { dist =>
+        sym.join(dist.select(col("node").as("u"), col("dist")))
+          .select(col("v").as("node"), (col("dist") + lit(1)).as("dist"), noDist)
+          .union(dist.select(col("node"), col("dist"), col("dist").as("prev")))
+          .groupBy("node").agg(min("dist").as("dist"), max("prev").as("prev"))
       }
     }
-    deg.select(col("u").as("node"), col("d").as("core_deg"))
-      .withColumn("stop_round", lit(r))
+  }
+
+  /** The KMV neighborhood-sketch chain behind g_anf, g_harmonic and
+    * g_eff_diameter: per-node ball-size estimates (node, n_hashes, est) for
+    * every radius 0..`radii`. Each node's sketch is the K smallest md5
+    * hashes of its ball; a round merges its own ∪ in-neighbors' sketches
+    * (one edge⋈sketch join on fixed-width long keys against the src-staged
+    * edges, ≤ K hashes per node entering the shuffle) and keeps the min-K
+    * through the bounded-heap TopKPerKey operator — never a per-node list
+    * that grows with degree. est = (K−1)/frac(Kth hash), counts < K
+    * reported exactly — both engines derive the identical 4-dp doubles. */
+  private def kmvBalls(s: SparkSession, dir: String,
+                       radii: Int): IndexedSeq[DataFrame] = {
+    val K = 16
+    EdgeLayout.staged(longEdges(s, dir), "src") { e =>
+      val own = e.edges.select(col("src").as("node")).distinct()
+        .select(col("node"), md5(col("node").cast("string")).as("h"))
+      // distinct-mode top-k: dedup happens INSIDE the bounded per-key
+      // heaps of the map-side partial pass (round 10) — the previous
+      // `.distinct()` shuffled the whole |E|·k propagation multiset
+      // (~190 M rows / ~1.25 GB-per-task at sf1) before the heap ever
+      // saw a row; now the only exchange carries ≤ partitions·keys·k
+      Superstep.run(own, radii) { sk =>
+        org.apache.spark.sql.GraftPlanBridge.topKPerKeyDistinct(
+          sk.union(e.join(sk.withColumnRenamed("node", "src"))
+            .select(col("dst").as("node"), col("h"))),
+          Seq("node"), Seq("h" -> true), K)
+      }.frames.map { sk =>
+        sk.withColumn("rn",
+            row_number().over(Window.partitionBy("node").orderBy("h")))
+          .groupBy("node")
+          .agg(count(lit(1)).as("n_hashes"),
+            max(when(col("rn") === K,
+              conv(substring(col("h"), 1, 12), 16, 10).cast("long"))).as("v"))
+          .select(col("node"), col("n_hashes"),
+            when(col("n_hashes") < K, col("n_hashes").cast("double"))
+              .otherwise(round(lit((K - 1).toDouble) / col("v")
+                * 281474976710656.0, 4)).as("est"))
+      }
+    }
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -245,37 +293,37 @@ object GraphOps {
       // each half-round exchanges only the node-sized score frame. eDst
       // stages FROM the eSrc cache (one extra in-memory repartition, not
       // a second lineitem scan+distinct).
-      val eSrc = graft.operators.EdgeLayout.stageByKey(
-        Tables.load(s, dir, "lineitem")
+      EdgeLayout.staged(Tables.load(s, dir, "lineitem")
           .select((col("l_suppkey") * 2).as("src"),
                   (col("l_partkey") * 2 + 1).as("dst"))
-          .distinct(), "src")
-      val eDst = graft.operators.EdgeLayout.stageByKey(eSrc, "dst")
-      val wAll = Window.partitionBy()
-      var hub = eSrc.select(col("src").as("node")).distinct()
-        .withColumn("h", lit(1.0))
-      var auth: DataFrame = hub // placeholder; set in round 1
-      for (_ <- 1 to 2) {
-        val ad = eSrc.hint("merge").join(hub.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("h").cast(DecimalType(28, 18))).as("adec"))
-        auth = ad.select(col("node"),
-            (col("adec").cast("double") /
-              max(col("adec")).over(wAll).cast("double")).as("a"))
-          .localCheckpoint()
-        val hd = eDst.hint("merge").join(auth.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node"))
-          .agg(sum(col("a").cast(DecimalType(28, 18))).as("hdec"))
-        hub = hd.select(col("node"),
-            (col("hdec").cast("double") /
-              max(col("hdec")).over(wAll).cast("double")).as("h"))
-          .localCheckpoint()
+          .distinct(), "src") { eSrc =>
+        EdgeLayout.staged(eSrc.edges, "dst") { eDst =>
+          val wAll = Window.partitionBy()
+          var hub = eSrc.edges.select(col("src").as("node")).distinct()
+            .withColumn("h", lit(1.0))
+          var auth: DataFrame = hub // placeholder; set in round 1
+          for (_ <- 1 to 2) {
+            val ad = eSrc.join(hub.withColumnRenamed("node", "src"))
+              .groupBy(col("dst").as("node"))
+              .agg(sum(col("h").cast(DecimalType(28, 18))).as("adec"))
+            auth = ad.select(col("node"),
+                (col("adec").cast("double") /
+                  max(col("adec")).over(wAll).cast("double")).as("a"))
+              .localCheckpoint()
+            val hd = eDst.join(auth.withColumnRenamed("node", "dst"))
+              .groupBy(col("src").as("node"))
+              .agg(sum(col("a").cast(DecimalType(28, 18))).as("hdec"))
+            hub = hd.select(col("node"),
+                (col("hdec").cast("double") /
+                  max(col("hdec")).over(wAll).cast("double")).as("h"))
+              .localCheckpoint()
+          }
+          hub.select(col("node"), lit("hub").as("kind"),
+              round(col("h"), 6).as("score"))
+            .union(auth.select(col("node"), lit("authority").as("kind"),
+              round(col("a"), 6).as("score")))
+        }
       }
-      eDst.unpersist(false); eSrc.unpersist(false) // hub/auth checkpointed
-      hub.select(col("node"), lit("hub").as("kind"),
-          round(col("h"), 6).as("score"))
-        .union(auth.select(col("node"), lit("authority").as("kind"),
-          round(col("a"), 6).as("score")))
     }),
     "g_lpa" -> ((s, dir) => {
       // label propagation communities (Raghavan et al. 2007), SYNCHRONOUS
@@ -291,14 +339,12 @@ object GraphOps {
       // and the node set is round-invariant. The full (node, label)
       // assignment is hash-gated against 3 unrolled oracle rounds.
       // Node ids are LONGS here (s<k> → 2k, p<k> → 2k+1 — bijective, the
-      // two key spaces cannot collide) so the per-round argmax is the
-      // max(struct(cnt, -label)) two-stage HASH aggregate (map-side
-      // combined, no per-node sort) instead of a row_number window.
+      // two key spaces cannot collide) so the per-round argmax is a max
+      // over one packed DECIMAL(38,0) of (cnt, −label) — a two-stage HASH
+      // aggregate (map-side combined, no per-node sort) instead of a
+      // row_number window (see lpaLabels).
       // staged edge layout: every LPA round joins e on src
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      val labels = lpaLabels(e, rounds = 3)
-      e.unpersist(false) // every round's label frame is checkpointed
-      labels
+      EdgeLayout.staged(longEdges(s, dir), "src")(lpaLabels(_, rounds = 3))
     }),
     "g_modularity" -> ((s, dir) => {
       // modularity (Newman 2004) of the g_lpa partition — the
@@ -316,31 +362,30 @@ object GraphOps {
       import org.apache.spark.sql.expressions.Window
       // staged edge layout: 3 LPA rounds + the withSrc label join are all
       // src-keyed; the one dst join re-exchanges once (one-shot)
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      val labels = lpaLabels(e, rounds = 3)
-      val withSrc = e.join(labels.withColumnRenamed("node", "src")
-        .withColumnRenamed("label", "lsrc"), "src")
-      val dC = withSrc.groupBy("lsrc").agg(count(lit(1)).as("d_c"))
-      val wC = withSrc.join(labels.withColumnRenamed("node", "dst")
-          .withColumnRenamed("label", "ldst"), "dst")
-        .filter(col("lsrc") === col("ldst"))
-        .groupBy("lsrc").agg(count(lit(1)).as("w_c"))
-      val wtot = Window.partitionBy()
-      val res = dC.join(wC, Seq("lsrc"), "left")
-        .withColumn("w_c", coalesce(col("w_c"), lit(0L)))
-        .withColumn("m2", sum(col("d_c")).over(wtot))
-        .withColumn("term",
-          (col("w_c").cast("double") / col("m2").cast("double")
-            - (col("d_c").cast("double") / col("m2").cast("double"))
-              * (col("d_c").cast("double") / col("m2").cast("double")))
-            .cast(DecimalType(28, 16)))
-        .agg(count(lit(1)).as("n_communities"),
-          max(col("m2")).as("m2"),
-          round(sum(col("term")).cast("double"), 6).as("modularity"))
-        // 1-row result checkpointed so the edge cache can be released
-        .localCheckpoint()
-      e.unpersist(false)
-      res
+      EdgeLayout.staged(longEdges(s, dir), "src") { e =>
+        val labels = lpaLabels(e, rounds = 3)
+        val withSrc = e.edges.join(labels.withColumnRenamed("node", "src")
+          .withColumnRenamed("label", "lsrc"), "src")
+        val dC = withSrc.groupBy("lsrc").agg(count(lit(1)).as("d_c"))
+        val wC = withSrc.join(labels.withColumnRenamed("node", "dst")
+            .withColumnRenamed("label", "ldst"), "dst")
+          .filter(col("lsrc") === col("ldst"))
+          .groupBy("lsrc").agg(count(lit(1)).as("w_c"))
+        val wtot = Window.partitionBy()
+        dC.join(wC, Seq("lsrc"), "left")
+          .withColumn("w_c", coalesce(col("w_c"), lit(0L)))
+          .withColumn("m2", sum(col("d_c")).over(wtot))
+          .withColumn("term",
+            (col("w_c").cast("double") / col("m2").cast("double")
+              - (col("d_c").cast("double") / col("m2").cast("double"))
+                * (col("d_c").cast("double") / col("m2").cast("double")))
+              .cast(DecimalType(28, 16)))
+          .agg(count(lit(1)).as("n_communities"),
+            max(col("m2")).as("m2"),
+            round(sum(col("term")).cast("double"), 6).as("modularity"))
+          // 1-row result checkpointed so the edge cache can be released
+          .localCheckpoint()
+      }
     }),
     "g_degree_dist" -> ((s, dir) =>
       // degree distribution per bipartite side — the 1-pass profile that
@@ -414,7 +459,7 @@ object GraphOps {
       // this dense graph's degeneracy, so its fixpoint is the empty
       // core): measured convergence round 2/3/4 and a 98%+ surviving
       // core at sf0.001/0.01/0.1.
-      kcorePeelConv(coOrderPairs(s, dir, cap = 32), maxRounds = 8)
+      kcorePeel(coOrderPairs(s, dir, cap = 32), rounds = 8, converge = true)
     }),
     "g_bfs" -> ((s, dir) => {
       // multi-source BFS distance labeling on the part–part co-order
@@ -428,24 +473,8 @@ object GraphOps {
       // the textbook Pregel round as relational ops — frontier-sized
       // shuffles, never node×node. Projection fan-out-capped at 32
       // (non-binding here; the 100 TB skew guard — see coOrderPairs).
-      val e = coOrderPairs(s, dir, cap = 32)
       // staged edge layout (round 12): all 3 relaxation rounds join on u
-      val sym = graft.operators.EdgeLayout.stageByKey(
-        e.union(e.select(col("v").as("u"), col("u").as("v"))), "u")
-      var dist = sym.select(col("u")).distinct()
-        .filter(col("u") % 100 === 0)
-        .select(col("u").as("node"), lit(0).as("dist"))
-        .localCheckpoint()
-      for (_ <- 1 to 3) {
-        val relaxed = sym.hint("merge")
-          .join(dist.withColumnRenamed("node", "u"), "u")
-          .select(col("v").as("node"), (col("dist") + lit(1)).as("dist"))
-        dist = dist.union(relaxed)
-          .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
-      }
-      sym.unpersist(false) // every round's dist frame is checkpointed
-      dist
+      bfs(s, dir, rounds = 3, converge = false).last.select("node", "dist")
     }),
     "g_bfs_conv" -> ((s, dir) => {
       // FIXPOINT-terminated BFS — the convergence idiom's third family
@@ -461,33 +490,8 @@ object GraphOps {
       // the final distances AND that the engine detected the fixpoint at
       // the same round the oracle's static unroll does. Projection
       // fan-out-capped at 32 (non-binding; see coOrderPairs).
-      val e = coOrderPairs(s, dir, cap = 32)
-      val sym = graft.operators.EdgeLayout.stageByKey(
-        e.union(e.select(col("v").as("u"), col("u").as("v"))), "u")
-      var dist = sym.select(col("u")).distinct()
-        .filter(col("u") % 100 === 0)
-        .select(col("u").as("node"), lit(0).as("dist"))
-        .localCheckpoint()
-      var r = 0
-      var stopped = false
-      while (r < 5 && !stopped) {
-        r += 1
-        val relaxed = sym.hint("merge")
-          .join(dist.withColumnRenamed("node", "u"), "u")
-          .select(col("v").as("node"), (col("dist") + lit(1)).as("dist"))
-        val next = dist.union(relaxed)
-          .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint(true)
-        val changed = next.select(col("node"), col("dist").as("nd"))
-          .join(dist.select(col("node"), col("dist").as("pd")),
-            Seq("node"), "left")
-          .filter(col("pd").isNull || col("nd") =!= col("pd"))
-          .count()
-        if (changed == 0L) stopped = true
-        dist = next
-      }
-      sym.unpersist(false) // every round's dist frame is checkpointed
-      dist.withColumn("stop_round", lit(r))
+      val res = bfs(s, dir, rounds = 5, converge = true)
+      res.last.select(col("node"), col("dist"), lit(res.rounds).as("stop_round"))
     }),
     "g_linkpred" -> ((s, dir) => {
       // neighbor-overlap link scoring (common-neighbors + Jaccard) — the
@@ -547,36 +551,11 @@ object GraphOps {
       // per-node list that grows with degree; O(1) lineage via
       // localCheckpoint. est_reach = (k−1)/frac(kth hash), counts < k
       // reported exactly — both engines derive the identical doubles.
-      val K = 16
       // staged edge layout (the g_walks round-12 lesson): both sketch
-      // rounds join e on src — persist it partitioned+sorted by src so
-      // each round exchanges only the ≤ |V|·K sketch side
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      var sk = e.select(col("src").as("node")).distinct()
-        .select(col("node"), md5(col("node").cast("string")).as("h"))
-      for (_ <- 1 to 2) {
-        val prop = e.hint("merge").join(sk, e("src") === sk("node"))
-          .select(e("dst").as("node"), col("h"))
-        // distinct-mode top-k: dedup happens INSIDE the bounded per-key
-        // heaps of the map-side partial pass (round 10) — the previous
-        // `.distinct()` shuffled the whole |E|·k propagation multiset
-        // (~190 M rows / ~1.25 GB-per-task at sf1) before the heap ever
-        // saw a row; now the only exchange carries ≤ partitions·keys·k
-        sk = org.apache.spark.sql.GraftPlanBridge.topKPerKeyDistinct(
-            sk.union(prop), Seq("node"), Seq("h" -> true), K)
-          .localCheckpoint()
-      }
-      e.unpersist(false) // every round's sketch frame is checkpointed
-      val w = Window.partitionBy("node").orderBy("h")
-      sk.withColumn("rn", row_number().over(w))
-        .groupBy("node")
-        .agg(count(lit(1)).as("n_hashes"),
-          max(when(col("rn") === K,
-            conv(substring(col("h"), 1, 12), 16, 10).cast("long"))).as("v"))
-        .select(col("node"), col("n_hashes"),
-          when(col("n_hashes") < K, col("n_hashes").cast("double"))
-            .otherwise(round(lit((K - 1).toDouble) / col("v")
-              * 281474976710656.0, 4)).as("est_reach"))
+      // rounds join e on src, so each round exchanges only the ≤ |V|·K
+      // sketch side (see kmvBalls)
+      kmvBalls(s, dir, radii = 2)(2)
+        .select(col("node"), col("n_hashes"), col("est").as("est_reach"))
     }),
     "g_harmonic" -> ((s, dir) => {
       // harmonic centrality truncated at radius 2, estimated from the SAME
@@ -592,43 +571,14 @@ object GraphOps {
       // identical to g_anf (one edge⋈sketch join on fixed-width longs +
       // bounded-heap min-k) and both ball estimates ride one sketch
       // chain — radius 2 costs zero extra rounds over g_anf.
-      val K = 16
-      // staged edge layout — the g_anf rationale, one radius deeper
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      var sk = e.select(col("src").as("node")).distinct()
-        .select(col("node"), md5(col("node").cast("string")).as("h"))
-      def ballEst(skDf: DataFrame, out: String): DataFrame = {
-        val w = Window.partitionBy("node").orderBy("h")
-        skDf.withColumn("rn", row_number().over(w))
-          .groupBy("node")
-          .agg(count(lit(1)).as("n_hashes"),
-            max(when(col("rn") === K,
-              conv(substring(col("h"), 1, 12), 16, 10).cast("long"))).as("v"))
-          .select(col("node"),
-            when(col("n_hashes") < K, col("n_hashes").cast("double"))
-              .otherwise(round(lit((K - 1).toDouble) / col("v")
-                * 281474976710656.0, 4)).as(out))
-      }
-      val balls = (1 to 2).map { r =>
-        val prop = e.hint("merge").join(sk, e("src") === sk("node"))
-          .select(e("dst").as("node"), col("h"))
-        // distinct-mode top-k: dedup happens INSIDE the bounded per-key
-        // heaps of the map-side partial pass (round 10) — the previous
-        // `.distinct()` shuffled the whole |E|·k propagation multiset
-        // (~190 M rows / ~1.25 GB-per-task at sf1) before the heap ever
-        // saw a row; now the only exchange carries ≤ partitions·keys·k
-        sk = org.apache.spark.sql.GraftPlanBridge.topKPerKeyDistinct(
-            sk.union(prop), Seq("node"), Seq("h" -> true), K)
-          .localCheckpoint()
-        ballEst(sk, s"b$r")
-      }
-      e.unpersist(false) // ball frames derive from checkpointed sketches
+      val balls = kmvBalls(s, dir, radii = 2)
       // the combination ships UNROUNDED: b1/b2 are already identical
       // 4-dp doubles in both engines, and subtract / divide-by-2 / add
       // are bit-deterministic IEEE ops — a final round(·,4) would land
       // exactly on .xxxx5 ties (the /2 creates a 5th decimal) where
       // Spark's HALF_UP and DuckDB's binary rounding diverge
-      balls(0).join(balls(1), "node")
+      balls(1).select(col("node"), col("est").as("b1"))
+        .join(balls(2).select(col("node"), col("est").as("b2")), "node")
         .select(col("node"), col("b1"), col("b2"),
           (col("b1") - lit(1.0) +
             (col("b2") - col("b1")) / lit(2.0)).as("harmonic"))
@@ -648,48 +598,19 @@ object GraphOps {
       // whole distribution is 4 rows derived from three bounded-state
       // sketch rounds — the exact computation (all-pairs BFS) is |V|
       // traversals and does not exist as a plan at 100 TB.
-      val K = 16
-      // staged edge layout — the g_anf rationale, three rounds
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      // checkpointed: r0 reads it AFTER the unpersist below
-      var sk = e.select(col("src").as("node")).distinct()
-        .select(col("node"), md5(col("node").cast("string")).as("h"))
-        .localCheckpoint()
-      // radius 0: every ball is exactly {v} — N(0) = |V|, no estimator
-      val r0 = sk.groupBy()
-        .agg(count(lit(1)).cast("double").as("total_reach"))
-        .select(lit(0).as("radius"), col("total_reach"))
-      val perRadius = (1 to 3).map { r =>
-        val prop = e.hint("merge").join(sk, e("src") === sk("node"))
-          .select(e("dst").as("node"), col("h"))
-        // distinct-mode top-k: dedup happens INSIDE the bounded per-key
-        // heaps of the map-side partial pass (round 10) — the previous
-        // `.distinct()` shuffled the whole |E|·k propagation multiset
-        // (~190 M rows / ~1.25 GB-per-task at sf1) before the heap ever
-        // saw a row; now the only exchange carries ≤ partitions·keys·k
-        sk = org.apache.spark.sql.GraftPlanBridge.topKPerKeyDistinct(
-            sk.union(prop), Seq("node"), Seq("h" -> true), K)
-          .localCheckpoint()
-        val w = Window.partitionBy("node").orderBy("h")
-        sk.withColumn("rn", row_number().over(w))
-          .groupBy("node")
-          .agg(count(lit(1)).as("n_hashes"),
-            max(when(col("rn") === K,
-              conv(substring(col("h"), 1, 12), 16, 10).cast("long"))).as("v"))
-          .select(when(col("n_hashes") < K, col("n_hashes").cast("double"))
-            .otherwise(round(lit((K - 1).toDouble) / col("v")
-              * 281474976710656.0, 4)).as("est"))
-          .groupBy()
-          .agg(sum(col("est").cast(DecimalType(28, 4)))
-            .cast("double").as("total_reach"))
-          .select(lit(r).as("radius"), col("total_reach"))
+      // radius 0: every ball is exactly {v}, each estimate exactly 1.0, so
+      // the radius-0 sum is |V|
+      val perRadius = kmvBalls(s, dir, radii = 3).zipWithIndex.map {
+        case (ball, r) =>
+          ball.agg(sum(col("est").cast(DecimalType(28, 4)))
+              .cast("double").as("total_reach"))
+            .select(lit(r).as("radius"), col("total_reach"))
       }
-      e.unpersist(false) // radius frames derive from checkpointed sketches
       // per-node KMV estimates are monotone non-decreasing in r (the
       // sketch hash set only grows), so max over radii = N(3) = N(rmax)
       val all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing)
-      perRadius.foldLeft(r0)(_ union _)
+      perRadius.reduce(_ union _)
         .withColumn("frac", col("total_reach") / max("total_reach").over(all))
         .withColumn("eff_diameter",
           col("radius") === min(when(col("frac") >= 0.9, col("radius"))).over(all))
@@ -775,28 +696,28 @@ object GraphOps {
       // SortAggregate that SORTS the edge-sized join output by walk_id
       // every step; a fixed-width decimal min is a HashAggregate with
       // O(frontier) map state — no sort, no spill, map-side partials.
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      var frontier = e.select(col("src").as("node")).distinct()
-        .select(col("node").as("walk_id"), col("node"))
-        .localCheckpoint()
-      val out0 = frontier.select(col("walk_id"), lit(0).as("step"), col("node"))
-      val steps = (1 to 4).map { t =>
-        frontier = e.hint("merge").join(frontier, e("src") === frontier("node"))
-          .select(col("walk_id"),
-            expr("cast(conv(substring(md5(concat(cast(walk_id as string)" +
-              s", ':$t:', cast(dst as string))), 1, 15), 16, 10) as " +
-              "decimal(38,0)) * 9223372036854775808 + dst").as("hd"))
-          .groupBy("walk_id")
-          .agg(min(col("hd")).as("hd"))
-          .select(col("walk_id"),
-            expr("cast(hd % 9223372036854775808 as bigint)").as("node"))
+      EdgeLayout.staged(longEdges(s, dir), "src") { e =>
+        var frontier = e.edges.select(col("src").as("node")).distinct()
+          .select(col("node").as("walk_id"), col("node"))
           .localCheckpoint()
-        frontier.select(col("walk_id"), lit(t).as("step"), col("node"))
+        val out0 = frontier.select(col("walk_id"), lit(0).as("step"), col("node"))
+        val steps = (1 to 4).map { t =>
+          frontier = e.join(frontier.withColumnRenamed("node", "src"))
+            .select(col("walk_id"),
+              expr("cast(conv(substring(md5(concat(cast(walk_id as string)" +
+                s", ':$t:', cast(dst as string))), 1, 15), 16, 10) as " +
+                "decimal(38,0)) * 9223372036854775808 + dst").as("hd"))
+            .groupBy("walk_id")
+            .agg(min(col("hd")).as("hd"))
+            .select(col("walk_id"),
+              expr("cast(hd % 9223372036854775808 as bigint)").as("node"))
+            .localCheckpoint()
+          frontier.select(col("walk_id"), lit(t).as("step"), col("node"))
+        }
+        // every step is already materialized (eager localCheckpoint), so
+        // the edge cache is released before the result frame is consumed
+        steps.foldLeft(out0)(_ union _)
       }
-      // every step is already materialized (eager localCheckpoint), so the
-      // edge cache can be released before the result frame is consumed
-      e.unpersist(false)
-      steps.foldLeft(out0)(_ union _)
     }),
     "g_mis" -> ((s, dir) => {
       // Maximal independent set by Luby's algorithm (Luby SICOMP'86 — THE
@@ -818,51 +739,53 @@ object GraphOps {
       // rounds) — the full assignment hash-gates, not just the MIS size.
       // staged edge layout (g_walks round-12 lesson): both per-round edge
       // joins (neighbor-min and exclusion) are on src
-      val e = graft.operators.EdgeLayout.stageByKey(longEdges(s, dir), "src")
-      var undecided = e.select(col("src").as("node")).distinct()
-        .localCheckpoint()
-      var decided: Seq[DataFrame] = Nil
-      for (t <- 1 to 4) {
-        // the node id rides in the low bits so priorities are
-        // collision-free by construction (distinct nodes ⇒ distinct p
-        // even if their 60-bit md5 prefixes collide) — the strict p < np
-        // comparison then never ties across distinct nodes in either
-        // engine. Packed DECIMAL(38,0) (h1·2^63 + node, the g_walks
-        // argmin packing) instead of the former md5-string ∥ padded-node
-        // concat: min over a fixed-width decimal is a HashAggregate
-        // (min(string) planned as a SortAggregate sorting the edge-sized
-        // priority propagation every round) and the shuffled priority is
-        // 16 bytes, not 52 chars
-        val pri = undecided.select(col("node"),
-          expr(s"cast(conv(substring(md5(concat('$t:', " +
-            "cast(node as string))), 1, 15), 16, 10) as decimal(38,0)) " +
-            "* 9223372036854775808 + node").as("p"))
-        // min undecided-neighbor priority per undecided node: restrict
-        // both endpoints to the frontier (src via pri, dst via undecided)
-        val nbrMin = e.hint("merge").join(pri, e("src") === pri("node"))
-          .select(e("dst").as("node"), col("p").as("np"))
-          .join(undecided, Seq("node"), "left_semi")
-          .groupBy("node").agg(min(col("np")).as("np"))
-        val mis = pri.join(nbrMin, Seq("node"), "left")
-          .filter(col("np").isNull || col("p") < col("np"))
-          .select(col("node")).localCheckpoint()
-        val excluded = e.hint("merge").join(mis, e("src") === mis("node"))
-          .select(e("dst").as("node")).distinct()
-          .join(undecided, Seq("node"), "left_semi")
+      EdgeLayout.staged(longEdges(s, dir), "src") { e =>
+        var undecided = e.edges.select(col("src").as("node")).distinct()
           .localCheckpoint()
-        decided :+= mis.select(col("node"), lit(true).as("in_mis"),
-          lit(t).as("decided_round"))
-        decided :+= excluded.select(col("node"), lit(false).as("in_mis"),
-          lit(t).as("decided_round"))
-        undecided = undecided
-          .join(mis, Seq("node"), "left_anti")
-          .join(excluded, Seq("node"), "left_anti")
-          .localCheckpoint()
+        var decided: Seq[DataFrame] = Nil
+        for (t <- 1 to 4) {
+          // the node id rides in the low bits so priorities are
+          // collision-free by construction (distinct nodes ⇒ distinct p
+          // even if their 60-bit md5 prefixes collide) — the strict p < np
+          // comparison then never ties across distinct nodes in either
+          // engine. Packed DECIMAL(38,0) (h1·2^63 + node, the g_walks
+          // argmin packing) instead of the former md5-string ∥ padded-node
+          // concat: min over a fixed-width decimal is a HashAggregate
+          // (min(string) planned as a SortAggregate sorting the edge-sized
+          // priority propagation every round) and the shuffled priority is
+          // 16 bytes, not 52 chars
+          val pri = undecided.select(col("node"),
+            expr(s"cast(conv(substring(md5(concat('$t:', " +
+              "cast(node as string))), 1, 15), 16, 10) as decimal(38,0)) " +
+              "* 9223372036854775808 + node").as("p"))
+          // min undecided-neighbor priority per undecided node: restrict
+          // both endpoints to the frontier (src via pri, dst via undecided)
+          val nbrMin = e.join(pri.withColumnRenamed("node", "src"))
+            .select(col("dst").as("node"), col("p").as("np"))
+            .join(undecided, Seq("node"), "left_semi")
+            .groupBy("node").agg(min(col("np")).as("np"))
+          val mis = pri.join(nbrMin, Seq("node"), "left")
+            .filter(col("np").isNull || col("p") < col("np"))
+            .select(col("node")).localCheckpoint()
+          val excluded = e.join(mis.withColumnRenamed("node", "src"))
+            .select(col("dst").as("node")).distinct()
+            .join(undecided, Seq("node"), "left_semi")
+            .localCheckpoint()
+          decided :+= mis.select(col("node"), lit(true).as("in_mis"),
+            lit(t).as("decided_round"))
+          decided :+= excluded.select(col("node"), lit(false).as("in_mis"),
+            lit(t).as("decided_round"))
+          undecided = undecided
+            .join(mis, Seq("node"), "left_anti")
+            .join(excluded, Seq("node"), "left_anti")
+            .localCheckpoint()
       }
-      e.unpersist(false) // mis/excluded/undecided are all checkpointed
-      val rest = undecided.select(col("node"), lit(false).as("in_mis"),
-        lit(-1).as("decided_round"))
-      decided.foldLeft(rest)(_ union _)
+        // mis/excluded/undecided are all checkpointed: the result no longer
+        // reads the edge cache once it is released
+        val rest = undecided.select(col("node"), lit(false).as("in_mis"),
+          lit(-1).as("decided_round"))
+        decided.foldLeft(rest)(_ union _)
+      }
     }),
     "g_louvain" -> ((s, dir) => {
       // one Louvain level (Blondel et al., J. Stat. Mech. 2008 §2 — THE
@@ -886,22 +809,8 @@ object GraphOps {
       // aggregates (the LPA shape) + one community-sized Σtot aggregate
       // broadcast back; m2 is a 1-row driver scalar (BOUNDED — the
       // v_semdedup_scaled count idiom); O(1) lineage via localCheckpoint.
-      // regime-picked layout (the PageRank.stageOut rationale): below
-      // the broadcast threshold the planner broadcasts the label frame
-      // and the staged layout buys nothing; above it the sweeps
-      // merge-join the dst-staged cache
-      val e0 = longEdges(s, dir)
-        .select(col("src"), col("dst"), lit(1L).as("w")).localCheckpoint()
-      val m2 = e0.count() // BOUNDED: one scalar — 2·|E|, the ΔQ scale
-      val deg = e0.groupBy(col("src").as("node")).agg(sum("w").as("k"))
-        .localCheckpoint()
-      val merge = deg.count() > 4000000L
-      val e = if (merge) graft.operators.EdgeLayout.stageByKey(e0, "dst")
-              else e0
-      var lbl = deg.select(col("node"), col("node").as("c"))
-      for (_ <- 1 to 2) lbl = louvainSweep(e, deg, m2, lbl, merge)
-      if (merge) e.unpersist(false) // sweep outputs are checkpointed
-      lbl.select(col("node"), col("c").as("community"))
+      louvainLevel1(s, dir)((_, lbl) =>
+        lbl.select(col("node"), col("c").as("community")))._1
     }),
     "g_louvain2" -> ((s, dir) => {
       // the Louvain AGGREGATION phase + second level (Blondel et al. '08
@@ -924,36 +833,47 @@ object GraphOps {
       // full two-level trajectory (node, level-1 community, final
       // community), all hash-gated. At 100 TB the coarse sweep is the
       // cheap one; level 1's LPA-shaped rounds dominate, unchanged.
-      // regime-picked layout (the g_louvain rationale); the coarsening
-      // join pair consumes the same frame once more
-      val e0 = longEdges(s, dir)
-        .select(col("src"), col("dst"), lit(1L).as("w")).localCheckpoint()
-      val m2 = e0.count() // BOUNDED: one scalar (the g_louvain idiom)
-      val deg = e0.groupBy(col("src").as("node")).agg(sum("w").as("k"))
-        .localCheckpoint()
-      val merge = deg.count() > 4000000L
-      val e = if (merge) graft.operators.EdgeLayout.stageByKey(e0, "dst")
-              else e0
-      var lbl = deg.select(col("node"), col("node").as("c"))
-      for (_ <- 1 to 2) lbl = louvainSweep(e, deg, m2, lbl, merge)
-      val ce = e
-        .join(lbl.select(col("node").as("src"), col("c").as("cs")), "src")
-        .join(lbl.select(col("node").as("dst"), col("c").as("cd")), "dst")
-        .groupBy("cs", "cd").agg(sum("w").as("w"))
-        .localCheckpoint()
-      if (merge) e.unpersist(false) // coarse graph checkpointed
+      // the coarsening join pair reads level 1's edge frame once more,
+      // before its cache is released
+      val (ce, lbl, m2) = louvainLevel1(s, dir) { (e, lbl) =>
+        e.join(lbl.select(col("node").as("src"), col("c").as("cs")), "src")
+          .join(lbl.select(col("node").as("dst"), col("c").as("cd")), "dst")
+          .groupBy("cs", "cd").agg(sum("w").as("w"))
+          .localCheckpoint()
+      }
       val cdeg = ce.groupBy(col("cs").as("node")).agg(sum("w").as("k"))
         .localCheckpoint()
       val cedges = ce.filter(col("cs") =!= col("cd"))
         .select(col("cs").as("src"), col("cd").as("dst"), col("w"))
-      val l2 = louvainSweep(cedges, cdeg, m2,
-        cdeg.select(col("node"), col("node").as("c")))
+      val l2 = louvainSweep(EdgeLayout.Adjacency(cedges, "dst", staged = false),
+        cdeg, m2, cdeg.select(col("node"), col("node").as("c")))
       lbl.select(col("node"), col("c").as("c1"))
         .join(l2.select(col("node").as("c1"), col("c").as("community")),
           "c1")
         .select(col("node"), col("c1"), col("community"))
     })
   )
+
+  /** Louvain level 1 (the g_louvain trajectory) over unit-weight
+    * [[longEdges]]: 2 sweeps from singleton communities, with the edge
+    * layout picked from the node count ([[EdgeLayout.picked]] — below the
+    * broadcast threshold the label frame broadcasts and staging buys
+    * nothing; above it the sweeps merge-join the dst-staged cache). `next`
+    * reads the edge frame and the level-1 labels before the cache is
+    * released. Returns (next's result, level-1 labels, m2). */
+  private def louvainLevel1[T](s: SparkSession, dir: String)
+                              (next: (DataFrame, DataFrame) => T): (T, DataFrame, Long) = {
+    val e0 = longEdges(s, dir)
+      .select(col("src"), col("dst"), lit(1L).as("w")).localCheckpoint()
+    val m2 = e0.count() // BOUNDED: one scalar — 2·|E|, the ΔQ scale
+    val deg = e0.groupBy(col("src").as("node")).agg(sum("w").as("k"))
+      .localCheckpoint()
+    EdgeLayout.picked(e0, "dst", deg.count()) { e =>
+      val lbl = (1 to 2).foldLeft(deg.select(col("node"), col("node").as("c")))(
+        (l, _) => louvainSweep(e, deg, m2, l)) // sweep outputs are checkpointed
+      (next(e.edges, lbl), lbl, m2)
+    }
+  }
 
   /** One synchronous Louvain sweep over a WEIGHTED edge frame
     * (src, dst, w) — the g_louvain ΔQ argmax generalized so the level-2
@@ -963,13 +883,11 @@ object GraphOps {
     * DECIMAL(38,0) (HUGEINT in the oracle), ties → smallest community.
     * Plan: one edge⋈label join + two hash aggregates + one
     * community-sized Σtot aggregate; O(1) lineage via localCheckpoint. */
-  private def louvainSweep(e: DataFrame, deg: DataFrame, m2: Long,
-                           lbl: DataFrame,
-                           merge: Boolean = false): DataFrame = {
+  private def louvainSweep(e: EdgeLayout.Adjacency, deg: DataFrame, m2: Long,
+                           lbl: DataFrame): DataFrame = {
     val sigma = lbl.join(deg, "node")
       .groupBy(col("c").as("cand")).agg(sum("k").as("sigma"))
-    val nb = (if (merge) e.hint("merge") else e).join(
-        lbl.select(col("node").as("dst"), col("c").as("cd")), "dst")
+    val nb = e.join(lbl.select(col("node").as("dst"), col("c").as("cd")))
       .groupBy(col("src").as("node"), col("cd").as("cand"))
       .agg(sum("w").as("k_in"))
     val cand = nb.unionByName(

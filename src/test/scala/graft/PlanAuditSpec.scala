@@ -30,8 +30,8 @@ class PlanAuditSpec extends AnyFunSuite {
     "t_ccnet_bucket", // the t_lm_quality chain (1-row vocab-total broadcast)
     "g_triangles", // three 1-row census aggregates composed
     "g_butterflies", // two 1-row census aggregates composed (same pattern)
-    // (g_kcore's 1-row threshold broadcast is inside localCheckpoint-
-    // truncated rounds — the audited final plan is checkpoint-scan + agg)
+    // (g_kcore's degree threshold is a driver-side scalar, so its rounds
+    // plan no 1-row broadcast at all)
     "q_dq_report", // RI check: two 1-row count aggregates composed
     "q_sample_est", // sample-estimate vs exact: two 1-row aggregates composed
     "d_dedup_eval", // precision/recall: three 1-row count aggregates composed

@@ -356,6 +356,33 @@ class ScaleSpec extends AnyFunSuite {
     assert(df.count() == 16 * 64)
   }
 
+  test("g_bfs_conv: the changed-node probe adds no job to its round") {
+    // the probe is observed on the round's own checkpoint (Superstep), so
+    // a round costs only its checkpoint's jobs. A separate probe action
+    // (a join + count over the checkpoint, the old form) adds at least 2
+    // jobs per round: 31 jobs for this query
+    val (df, jobs) = jobsOf(graft.SparkEntry.queries("g_bfs_conv")(spark, dir))
+    val rounds = df.select("stop_round").distinct().collect().map(_.getInt(0))
+    assert(rounds.sameElements(Array(3)), rounds.mkString(","))
+    // 18 measured, set-up included
+    assert(jobs <= 5 * 3 + 6, s"$jobs jobs for 3 rounds")
+  }
+
+  test("connectedComponents: the changed-label probe adds no job to its round") {
+    // the bipartite supplier-part graph at sf0.001 settles in 3 rounds:
+    // a cap of 3 converges and a cap of 2 is an error
+    val pairs = Tables.load(spark, dir, "lineitem")
+      .select((col("l_suppkey") * 2).as("a"), (col("l_partkey") * 2 + 1).as("b"))
+      .distinct().localCheckpoint()
+    intercept[IllegalArgumentException](
+      Components.connectedComponents(pairs, "a", "b", maxIters = 2))
+    val (_, jobs) =
+      jobsOf(Components.connectedComponents(pairs, "a", "b", maxIters = 3))
+    // 13 measured; the old decimal label-sum probe ran one more aggregate
+    // action per round and one over the seed (21 jobs)
+    assert(jobs <= 4 * 3 + 4, s"$jobs jobs for 3 rounds")
+  }
+
   test("reporting e2e load path scales linearly in staged pages") {
     // the round-10 verdict's ask #5: p_reporting_e2e only ever ran at the
     // ~10-row bundled fixture; this gate synthesizes reference-shaped
