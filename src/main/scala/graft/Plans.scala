@@ -130,11 +130,15 @@ object Plans {
         "TopKPerKey exchange (≤ partitions·N·k rows), and each round " +
         "localCheckpoints (O(1) lineage)."),
       "v_knn_descent_conv" -> ("100× plan: identical per-round candidate " +
-        "frame as v_knn_descent, but rounds run only until the changed-" +
-        "edge count (one left_anti + count per round — integer, no " +
-        "embedding scoring) drops below the integer threshold N·36/100; " +
-        "measured stop rounds 5/4/1 at sf0.001/0.01/0.1 vs cap 6, so the " +
-        "steady-state cost is the stop round's prefix, not the cap."),
+        "frame as v_knn_descent on the same Superstep loop, but rounds " +
+        "run only until the changed-edge count drops below the integer " +
+        "threshold N·36/100. Each round flags its fresh edges with one " +
+        "key-equality left join against the previous round's k·N edges " +
+        "(no embedding scoring), and the count is observed on the round's " +
+        "own checkpoint — no extra job per round. Measured stop rounds " +
+        "5/4/1 at sf0.001/0.01/0.1 vs cap 6, so the steady-state cost is " +
+        "the stop round's prefix, not the cap; the plan below is the " +
+        "stopping round's checkpoint scan."),
       "v_knn_descent_append" -> ("100× plan: the offline base-corpus " +
         "round artifacts are reused verbatim for every unaffected node; " +
         "per round the plan runs linear no-scoring passes (sym build + " +
@@ -242,8 +246,9 @@ object Plans {
         "corpus-sized work and at scale swaps for the IVF/PQ probe path; " +
         "everything after — the N×N pair-cosine matrix off hoisted norms " +
         "and k greedy argmax picks — is bounded by SERVING constants " +
-        "(N=20, k=8), and each pick is a 1-row driver action over a " +
-        "checkpointed 20-row frame (the Lloyd scalar class)."),
+        "(N=20, k=8): the N candidates and the N·(N−1) pair similarities " +
+        "are collected ONCE and the k picks run on the driver (the Lloyd " +
+        "model class), so the plan below is the 8-row local result."),
       "t_dsir" -> ("100× plan: the 256-bucket hashed model is two " +
         "map-side-combined aggregations + a BROADCAST join back (the " +
         "model, not data); per-doc integer sums absorb map-side; " +
@@ -285,7 +290,8 @@ object Plans {
         "spelled as island-parity windows, so the inherently sequential " +
         "step parallelizes per doc with no cross-row iteration; at " +
         "100 TB a trainer runs this loop over a sampled subcorpus with " +
-        "the identical plan."),
+        "the identical plan (bpeTrain — the same loop t_bpe_encode " +
+        "trains with — on Superstep, one checkpoint per round)."),
       "g_anf" -> ("100× plan: per round, the sketch frame (≤ k rows per " +
         "node, fixed-width long keys) merge-joins the STAGED edge table " +
         "(EdgeLayout, round 12 — partitioned+sorted by src, persisted, " +
@@ -409,7 +415,8 @@ object Plans {
         "is source-cardinality, never corpus-shaped."),
       "t_bpe_encode" -> ("100× plan: the merge table trains on a FIXED " +
         "20% split (at 100 TB: a fixed-size sample — tokenizers never " +
-        "train on the corpus), then 3 apply-only rewrite rounds over the " +
+        "train on the corpus; bpeTrain, the t_bpe_train loop), then 3 " +
+        "apply-only rewrite rounds over the " +
         "full corpus, each ONE doc-key exchange reused across its windows " +
         "with match-sized rewrite joins (the t_bpe_train plan without the " +
         "pair-count aggregates); the trained vocab is tokenizer-sized and " +
@@ -419,9 +426,11 @@ object Plans {
         "broadcast weight join + a doc-key aggregate (pred), a label " +
         "join, and a bucket-key map-side-combined aggregate (grad) — the " +
         "corpus never leaves the executors; only the 64-row model and " +
-        "the 1-row loss reach the driver per round (the v_kmeans_iter " +
-        "Lloyd-class state). Fixed-point integer arithmetic end to end, " +
-        "so scale changes cost, never results."),
+        "the 1-row loss reach the driver per round, in ONE action: the " +
+        "gradient collect, with the loss observed on the error frame it " +
+        "streams (the lloyd driver-held-model state). Fixed-point " +
+        "integer arithmetic end to end, so scale changes cost, never " +
+        "results."),
       "t_hash_embed" -> ("100× plan: the hashing trick needs no trained " +
         "model and no global state — one scan-fused explode, one " +
         "(doc,bucket) hash aggregate, one doc-keyed aggregate, all " +

@@ -111,9 +111,9 @@ object IvfIndex {
   }
 
   /** Content fingerprint for persisted-index cache keys, in ONE narrow
-    * aggregation: (row count, bit_xor of xxhash64(id, first vector
-    * component)). Order-independent, per-row independent, and any
-    * single-vector mutation at FIXED cardinality changes it — the
+    * aggregation: (row count, bit_xor of xxhash64(id, whole vector)).
+    * Order-independent, per-row independent, and a mutation of ANY
+    * component of any vector at FIXED cardinality changes it — the
     * round-11 stale-cache hazard (a regenerated same-row-count corpus
     * silently served the old index when the key was dir+count alone).
     * bit_xor, not sum: a Long sum of 64-bit hashes overflows under ANSI.
@@ -122,7 +122,7 @@ object IvfIndex {
                         vecCol: String): (Long, String) = {
     val r = emb.agg(
       count(lit(1)),
-      expr(s"bit_xor(xxhash64($idCol, element_at($vecCol, 1)))")).first()
+      expr(s"bit_xor(xxhash64($idCol, $vecCol))")).first()
     val fp = if (r.isNullAt(1)) 0L else r.getLong(1)
     (r.getLong(0), java.lang.Long.toHexString(fp).take(12))
   }
@@ -131,15 +131,16 @@ object IvfIndex {
     * private tmp sibling and rename it to the final path, so a concurrent
     * reader never observes a half-written index and a concurrent builder
     * race resolves to whichever rename wins (both artifacts are equivalent
-    * — the path embeds the content fingerprint). The loser's tmp dir is
-    * deleted. */
-  def publishOnce(path: java.io.File, marker: String = "_SUCCESS")
-                 (build: String => Unit): Unit = {
-    if (new java.io.File(path, marker).exists()) return
+    * — the path embeds the content fingerprint). The tmp sibling never
+    * outlives the call: it is deleted when the rename loses and when the
+    * build throws (the exception reaches the caller, and the next call
+    * builds afresh). */
+  def publishOnce(path: java.io.File)(build: String => Unit): Unit = {
+    if (new java.io.File(path, "_SUCCESS").exists()) return
     val tmp = new java.io.File(path.getParentFile,
       path.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    build(tmp.toString)
-    if (!tmp.renameTo(path)) deleteRecursively(tmp)
+    try { build(tmp.toString); tmp.renameTo(path) }
+    finally deleteRecursively(tmp)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -148,29 +149,40 @@ object IvfIndex {
     f.delete()
   }
 
-  /** Persisted-index lifecycle: load the sampled-centroid assignment from a
-    * parquet index table, building it ONCE if absent — the production
-    * serving path, where the IVF build is an offline indexing job and a
-    * query pays only the probe. The index path is keyed by a content
-    * fingerprint (source dir + nCells + corpus row count + content xor —
-    * see [[corpusFingerprint]]), so a changed corpus rebuilds rather than
-    * serving a stale assignment even at identical cardinality; within a
-    * session/benchmark, every call after the first is a plain parquet scan.
-    * At scale the same artifact is the corpus's bucketing column (write
-    * the corpus bucketed by `cell`; a probe reads nprobe/nCells of it). */
-  def loadOrBuildSampled(spark: SparkSession, emb: DataFrame, srcTag: String,
-                         idCol: String, vecCol: String, nCells: Int): DataFrame = {
+  /** The one persisted-artifact key and lifecycle: the artifact of `kind`
+    * lives under java.io.tmpdir at a path keyed by the source tag (MD5),
+    * the build `params` and the corpus content ([[corpusFingerprint]]: row
+    * count + content xor), so a changed corpus rebuilds rather than
+    * serving a stale artifact even at identical cardinality. It is built
+    * once through [[publishOnce]] (the build must leave a root `_SUCCESS`
+    * marker, as a parquet write does) and its path returned; every later
+    * call is the fingerprint scan plus whatever read the caller does. */
+  def artifact(kind: String, srcTag: String, emb: DataFrame, idCol: String,
+               vecCol: String, params: Any*)(build: String => Unit): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(srcTag.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val (n, fp) = corpusFingerprint(emb, idCol, vecCol)
     val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-ivf-index-$digest-$nCells-$n-$fp")
-    publishOnce(path) { tmp =>
+      (Seq("graft", kind, digest) ++ params ++ Seq(n, fp)).mkString("-"))
+    publishOnce(path)(build)
+    path.toString
+  }
+
+  /** Persisted-index lifecycle: load the sampled-centroid assignment from a
+    * parquet index table, building it ONCE if absent — the production
+    * serving path, where the IVF build is an offline indexing job and a
+    * query pays only the probe. Keyed and published by [[artifact]]
+    * (source dir + nCells + corpus content); within a session/benchmark,
+    * every call after the first is a plain parquet scan.
+    * At scale the same artifact is the corpus's bucketing column (write
+    * the corpus bucketed by `cell`; a probe reads nprobe/nCells of it). */
+  def loadOrBuildSampled(spark: SparkSession, emb: DataFrame, srcTag: String,
+                         idCol: String, vecCol: String, nCells: Int): DataFrame =
+    spark.read.parquet(artifact("ivf-index", srcTag, emb, idCol, vecCol,
+        nCells) { tmp =>
       assignSampled(emb, idCol, vecCol, nCells)
         .write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.parquet(path.toString)
-  }
+    })
 
   /** The nprobe cells nearest the query, IN-PLAN with the same
     * decimal-exact cosine as the oracle — a driver-side double-math sort

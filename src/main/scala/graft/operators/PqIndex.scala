@@ -147,18 +147,13 @@ object PqIndex {
   def loadOrBuildPq(spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
                     srcTag: String, idCol: String, vecCol: String,
                     m: Int, subDim: Int, nCodes: Int): (DataFrame, DataFrame) = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(srcTag.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // content-fingerprinted key + atomic publish (the IvfIndex contract):
-    // a same-cardinality corpus change rebuilds instead of serving stale
-    val (n, fp) = IvfIndex.corpusFingerprint(emb, idCol, vecCol)
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-pq-index-$digest-$m-$nCodes-$n-$fp")
-    IvfIndex.publishOnce(base, marker = "codes/_SUCCESS") { tmp =>
+    val base = IvfIndex.artifact("pq-index", srcTag, emb, idCol, vecCol,
+        m, nCodes) { tmp =>
       val cb = codebook(emb, idCol, vecCol, m, subDim, nCodes)
       cb.write.mode("overwrite").parquet(s"$tmp/codebook")
       encode(emb, idCol, vecCol, cb, m, subDim)
         .write.mode("overwrite").parquet(s"$tmp/codes")
+      new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
     (spark.read.parquet(s"$base/codebook"), spark.read.parquet(s"$base/codes"))
   }

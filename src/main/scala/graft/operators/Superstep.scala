@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * over a relational frame): it owns the round counter and its cap, the
   * lineage truncation of each round's frame, an optional convergence
   * statistic, and the stopping round. PageRank, the component labelings,
-  * the k-core peel, BFS and the KMV sketch chain are step functions on it.
+  * the k-core peel, BFS, the KMV sketch chain, NN-Descent, the PCA power
+  * iteration and the BPE merge loop are step functions on it.
   *
   * EAGER mode (the default) `localCheckpoint`s `init` and every round's
   * frame, so later rounds and the caller read memory, never the round's

@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
 
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Components, TextDedup}
+import graft.operators.{Components, Superstep, TextDedup}
 
 /** Text analysis + document dedup surface over the `documents` table —
   * the LLM-training-data-pipeline operators (token counting, quality
@@ -53,7 +53,7 @@ object TextOps {
 
   /** Greedy LEFT-TO-RIGHT non-overlapping application of ONE BPE merge
     * (a, b) to positional symbol sequences (doc_id, pos, sym) — the
-    * corpus-rewrite step of t_bpe_train, shared with t_bpe_encode's
+    * corpus-rewrite step of bpeTrain, shared with t_bpe_encode's
     * apply-only path: match positions → consecutive-run islands
     * (gaps-and-islands) → keep every EVEN offset within its island
     * (exactly the greedy scan's picks, incl. the a==b chain case) → drop
@@ -85,6 +85,38 @@ object TextOps {
         concat(col("sym"), lit("+"), lit(b))).otherwise(col("sym")))
       .withColumn("pos", (row_number().over(wPos) - 1).cast(LongType))
       .select("doc_id", "pos", "sym")
+  }
+
+  /** Positional symbol sequences (doc_id, pos, sym) of each document's
+    * whitespace tokens — the BPE starting alphabet. */
+  private def bpeSymbols(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), posexplode(TextFunctions.tokens(col("text"))))
+      .toDF("doc_id", "pos", "sym")
+      .withColumn("pos", col("pos").cast(LongType))
+
+  /** BPE tokenizer TRAINING (Sennrich et al., ACL 2016 — the published
+    * merge loop) over (doc_id, pos, sym) sequences, `rounds` merges on
+    * [[Superstep]] (the input and every rewritten corpus checkpointed):
+    * per round (1) global adjacent-pair counts (map-side combined), (2)
+    * the merge decision — top-1 by (count DESC, pair ASC), a 1-row driver
+    * scalar of the Lloyd class, (3) the corpus rewrite ([[bpeApplyMerge]]).
+    * Returns the rewritten sequences and the merges in training order. */
+  private def bpeTrain(seqs: DataFrame, rounds: Int)
+      : (DataFrame, Vector[(String, String)]) = {
+    import org.apache.spark.sql.expressions.Window
+    val wPos = Window.partitionBy("doc_id").orderBy("pos")
+    var merges = Vector.empty[(String, String)]
+    val out = Superstep.run(seqs, rounds) { cur =>
+      // BOUNDED: take(1) is the 1-row merge decision, never data
+      val top = cur.withColumn("nxt", lead(col("sym"), 1).over(wPos))
+        .filter(col("nxt").isNotNull)
+        .groupBy("sym", "nxt").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("sym").asc, col("nxt").asc)
+        .take(1).head
+      merges :+= ((top.getString(0), top.getString(1)))
+      bpeApplyMerge(cur, top.getString(0), top.getString(1))
+    }.last
+    (out, merges)
   }
 
   private val langMarkers: Seq[(String, Seq[String])] = Seq(
@@ -1443,13 +1475,13 @@ object TextOps {
       // truncate-toward-zero integer division — Scala Long '/' and
       // DuckDB '//' agree, verified) so every round replays bit-exactly
       // cross-engine with no libm and no float accumulation ambiguity:
-      // the v_kmeans_iter unrolled-round idiom applied to GD. Plan per
-      // round: one 64-row broadcast weight join + doc-key aggregate
+      // lloyd's driver-held model applied to GD. Plan per round, ONE
+      // action: one 64-row broadcast weight join + doc-key aggregate
       // (pred), one label join (err), one bucket-key aggregate (grad —
-      // map-side combined, 64-row model collect), one decimal sse agg;
-      // the corpus never leaves the executors, only the d-row model and
-      // 1-row loss do. Output: the 64-row weight trajectory (w_r1..3)
-      // + per-round mse + final train accuracy as integer counts —
+      // map-side combined, 64-row model collect), with the decimal sse
+      // observed on err inside that collect; the corpus never leaves the
+      // executors, only the d-row model and 1-row loss do. Output: the
+      // 64-row weight trajectory (w_r1..3) + per-round mse + final train accuracy as integer counts —
       // a wrong gradient, a drifted division, or a misordered round all
       // change the hash-gated trajectory. Gradient magnitude bound:
       // |g| <= N * maxlen * 2^21 — long-safe past 1e9 docs; sse uses a
@@ -1468,38 +1500,35 @@ object TextOps {
       // BOUNDED: <= 64 rows — the feature space, not data
       val buckets: Array[Long] = feats.select("bucket").distinct()
         .orderBy("bucket").collect().map(_.getLong(0))
-      var w: Map[Long, Long] = buckets.map(_ -> 0L).toMap
-      var wHist = Vector.empty[Map[Long, Long]]
-      var mseHist = Vector.empty[Double]
-      for (_ <- 1 to 3) {
-        val wDf = w.toSeq.toDF("bucket", "w")
-        val pred = feats.join(broadcast(wDf), "bucket")
+      def predict(w: Map[Long, Long]): DataFrame =
+        feats.join(broadcast(w.toSeq.toDF("bucket", "w")), "bucket")
           .groupBy("doc_id").agg(sum(col("x") * col("w")).as("p"))
-        val err = labels.join(pred, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            (coalesce(col("p"), lit(0L)) - col("y") * lit(1L << 20)).as("e"))
-          .localCheckpoint()
-        // BOUNDED: <= 64 rows — the gradient IS the model update
-        val grad: Map[Long, Long] = feats.join(err, "doc_id")
-          .groupBy("bucket").agg(sum(col("x") * col("e")).as("g"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // BOUNDED: 1 row — the round's training loss
-        val sse = err.agg(sum((col("e").cast(DecimalType(38, 0))
-            * col("e").cast(DecimalType(38, 0)))).as("sse"))
-          .first().getDecimal(0)
-        w = w.map { case (b, wb) => b -> (wb - grad.getOrElse(b, 0L) / (n * 256L)) }
-        wHist :+= w
-        // fixed chain: exact-decimal -> correctly-rounded double, then
-        // two IEEE divisions in fixed order (mirrored in the oracle)
-        mseHist :+= sse.doubleValue / n.toDouble / 1099511627776.0
-      }
+      // ONE action per round: the gradient collect. err is read once, by
+      // the gradient join, so it needs no checkpoint, and the round's
+      // training loss is observed on it as it streams into the gradient
+      val hist = (1 to 3).scanLeft((buckets.map(_ -> 0L).toMap, 0.0)) {
+        case ((w, _), _) =>
+          val sse = Observation()
+          val err = labels.join(predict(w), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              (coalesce(col("p"), lit(0L)) - col("y") * lit(1L << 20)).as("e"))
+            .observe(sse, sum(col("e").cast(DecimalType(38, 0))
+              * col("e").cast(DecimalType(38, 0))).as("sse"))
+          // BOUNDED: <= 64 rows — the gradient IS the model update
+          val grad: Map[Long, Long] = feats.join(err, "doc_id")
+            .groupBy("bucket").agg(sum(col("x") * col("e")).as("g"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          // fixed chain: exact-decimal -> correctly-rounded double, then
+          // two IEEE divisions in fixed order (mirrored in the oracle)
+          (w.map { case (b, wb) => b -> (wb - grad.getOrElse(b, 0L) / (n * 256L)) },
+            sse.get("sse").asInstanceOf[java.math.BigDecimal].doubleValue
+              / n.toDouble / 1099511627776.0)
+      }.tail
+      val (wHist, mseHist) = (hist.map(_._1), hist.map(_._2))
       // final train accuracy with w_r3, as INTEGER counts (no rounding):
       // predicted en iff pred > 0.5 in fixed-point (2^19)
-      val wDf3 = w.toSeq.toDF("bucket", "w")
-      val predF = feats.join(broadcast(wDf3), "bucket")
-        .groupBy("doc_id").agg(sum(col("x") * col("w")).as("p"))
       // BOUNDED: 1 row — the accuracy scalar pair
-      val accRow = labels.join(predF, Seq("doc_id"), "left")
+      val accRow = labels.join(predict(wHist(2)), Seq("doc_id"), "left")
         .agg(sum(when((coalesce(col("p"), lit(0L)) > lit(1L << 19))
             === (col("y") === 1L), 1L).otherwise(0L)).as("n_correct"),
           count(lit(1)).as("n_docs"))
@@ -1517,48 +1546,22 @@ object TextOps {
       // BPE tokenizer TRAINING as distributed dataflow (Sennrich et al.,
       // ACL 2016 — the published merge-loop, here over whitespace symbols;
       // a real trainer iterates the same plan over its evolving subword
-      // sequences): 3 merge rounds, each = (1) global adjacent-pair
-      // counts (map-side combined), (2) the merge decision — top-1 by
-      // (count DESC, pair ASC), a 1-row driver scalar of the Lloyd
-      // class, (3) the corpus rewrite: greedy LEFT-TO-RIGHT
-      // non-overlapping application of the merge, spelled relationally —
-      // match positions → consecutive-run islands (gaps-and-islands) →
-      // keep every EVEN offset within its island (exactly the greedy
-      // scan's picks, incl. the a==b chain case) → drop each absorbed
-      // right symbol, reindex. Every window partitions by doc_id, so the
-      // corpus shuffles ONCE per round on the doc key and Spark reuses
-      // that exchange across the round's windows; rewrite joins are
-      // match-sized. The final per-doc sequence fingerprint + the merge
-      // table (constant columns) hash-gate the whole loop: one wrong
-      // merge pick or one mis-applied overlap changes digests.
-      import org.apache.spark.sql.expressions.Window
-      val wPos = Window.partitionBy("doc_id").orderBy("pos")
-      var seqs = docs(s, dir).select(col("doc_id"),
-          posexplode(TextFunctions.tokens(col("text"))))
-        .toDF("doc_id", "pos", "sym")
-        .withColumn("pos", col("pos").cast(LongType))
-        .localCheckpoint()
-      var merges = Vector.empty[String]
-      for (_ <- 1 to 3) {
-        val withNext = seqs.withColumn("nxt", lead(col("sym"), 1).over(wPos))
-        val top = withNext.filter(col("nxt").isNotNull)
-          .groupBy("sym", "nxt").agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("sym").asc, col("nxt").asc)
-          .take(1).head
-        val (a, b) = (top.getString(0), top.getString(1))
-        merges :+= s"$a+$b"
-        // the rewrite is the shared greedy-apply (bpeApplyMerge) — also
-        // the apply-only path of t_bpe_encode
-        seqs = bpeApplyMerge(seqs, a, b).localCheckpoint()
-      }
+      // sequences): 3 merge rounds of bpeTrain over the whole corpus —
+      // pair counts, the top-1 merge decision, and the greedy
+      // left-to-right rewrite (bpeApplyMerge), ONE doc-key exchange per
+      // round with match-sized rewrite joins. The final per-doc sequence
+      // fingerprint + the merge table (constant columns) hash-gate the
+      // whole loop: one wrong merge pick or one mis-applied overlap
+      // changes digests.
+      val (seqs, merges) = bpeTrain(bpeSymbols(docs(s, dir)), 3)
+      val Seq(m1, m2, m3) = merges.map { case (a, b) => s"$a+$b" }
       seqs.groupBy("doc_id")
         .agg(count(lit(1)).as("n_syms"),
           md5(concat_ws(" ", transform(
             array_sort(collect_list(struct(col("pos"), col("sym")))),
             x => x.getField("sym")))).as("doc_fp"))
         .select(col("doc_id"), col("n_syms"), col("doc_fp"),
-          lit(merges(0)).as("m1"), lit(merges(1)).as("m2"),
-          lit(merges(2)).as("m3"))
+          lit(m1).as("m1"), lit(m2).as("m2"), lit(m3).as("m3"))
     }),
     "t_bpe_encode" -> ((s, dir) => {
       // BPE ENCODING against a TRAINED merge table — the apply half of
@@ -1580,34 +1583,16 @@ object TextOps {
       // md5 of the space-joined id sequence hash-gates merge order,
       // overlap handling, vocab rank, and UNK mapping at once.
       import org.apache.spark.sql.expressions.Window
-      val wPos = Window.partitionBy("doc_id").orderBy("pos")
-      val base = docs(s, dir).select(col("doc_id"),
-          posexplode(TextFunctions.tokens(col("text"))))
-        .toDF("doc_id", "pos", "sym")
-        .withColumn("pos", col("pos").cast(LongType))
-        .localCheckpoint()
-      var train = base.filter(col("doc_id") % 5 === 0).localCheckpoint()
-      var merges = Vector.empty[(String, String)]
-      for (_ <- 1 to 3) {
-        // BOUNDED: take(1) is the 1-row merge decision (the Lloyd-class
-        // scalar), never data
-        val top = train.withColumn("nxt", lead(col("sym"), 1).over(wPos))
-          .filter(col("nxt").isNotNull)
-          .groupBy("sym", "nxt").agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("sym").asc, col("nxt").asc)
-          .take(1).head
-        val (a, b) = (top.getString(0), top.getString(1))
-        merges :+= ((a, b))
-        train = bpeApplyMerge(train, a, b).localCheckpoint()
-      }
+      val base = bpeSymbols(docs(s, dir)).localCheckpoint()
+      val (train, merges) = bpeTrain(base.filter(col("doc_id") % 5 === 0), 3)
       // trained vocab: distinct symbols of the encoded split, dense ids in
       // symbol order — tokenizer-sized, the single-partition rank window
       // is bounded by vocab cardinality, not the corpus
       val vocab = train.select(col("sym")).distinct()
         .withColumn("tok_id",
           (row_number().over(Window.orderBy(col("sym"))) - 1).cast(LongType))
-      var enc = base
-      for ((a, b) <- merges) enc = bpeApplyMerge(enc, a, b).localCheckpoint()
+      val enc = merges.foldLeft(base) { case (cur, (a, b)) =>
+        bpeApplyMerge(cur, a, b).localCheckpoint() }
       val mergeTable = merges.map { case (a, b) => s"$a+$b" }.mkString(",")
       enc.join(broadcast(vocab), Seq("sym"), "left")
         .withColumn("tok_id", coalesce(col("tok_id"), lit(-1L)))

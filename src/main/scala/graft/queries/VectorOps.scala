@@ -1,12 +1,13 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.functions.FloatCosine
-import graft.operators.{IvfIndex, PqIndex, Similarity}
+import graft.operators.{IvfIndex, PqIndex, Similarity, Superstep}
 
 /** Embedding similarity surface over the `embeddings` table (vec_id,
   * embedding array<float>, label): brute-force exact kNN (baseline),
@@ -104,8 +105,9 @@ object VectorOps {
     * literal), the centered Gram matrix as ONE nested-lambda generator
     * pass (partial aggregation absorbs the d² products map-side; the only
     * shuffle carries tasks·d² partials, never N·d²), then 4 unrolled
-    * power-iteration rounds on the d²-row frame — decimal-exact matvec,
-    * inf-norm normalize via a window over the d-row frame (the normalizer
+    * power-iteration rounds on the d²-row frame (Superstep: each round's
+    * d-row frame is checkpointed) — decimal-exact matvec, inf-norm
+    * normalize via a window over the d-row frame (the normalizer
     * converges to the dominant eigenvalue). Returns (means, v-frame with
     * columns (j, v, nrm)). */
   private def topComponent(e: DataFrame): (Array[Double], DataFrame) = {
@@ -135,19 +137,17 @@ object VectorOps {
       .agg(sum(col("p")).cast("double").as("c"))
       .localCheckpoint()
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    var v = cov.select(col("i").as("j")).distinct()
+    val v0 = cov.select(col("i").as("j")).distinct()
       .select(col("j"), lit(1.0).as("v"), lit(0.0).as("nrm"))
-    for (_ <- 1 to 4) {
+    (means, Superstep.run(v0, 4) { v =>
       val w = cov.join(v.select(col("j"), col("v")), "j")
         .groupBy("i")
         .agg(sum((col("c") * col("v"))
           .cast(DecimalType(28, 16))).cast("double").as("w"))
-      v = w.select(col("i").as("j"),
-          (col("w") / max(abs(col("w"))).over(wAll)).as("v"),
-          max(abs(col("w"))).over(wAll).as("nrm"))
-        .localCheckpoint()
-    }
-    (means, v)
+      w.select(col("i").as("j"),
+        (col("w") / max(abs(col("w"))).over(wAll)).as("v"),
+        max(abs(col("w"))).over(wAll).as("nrm"))
+    }.last)
   }
 
   /** The trained PCA model as ONE d-row frame (j, m, v, nrm) — means +
@@ -158,28 +158,22 @@ object VectorOps {
       .select(col("j"), col("m"), col("v"), col("nrm"))
   }
 
-  /** Persist-or-load the trained component (the IvfIndex
-    * loadOrBuildSampled pattern verbatim): train-once / serve-many is the
-    * production shape — the component is a d-row MODEL artifact, so every
-    * consumer after the first pays a d-row parquet read instead of the
-    * full Gram + power-iteration chain. Cache key = (source tag, corpus
-    * count); like the ANN index cache, a code change to the trainer
-    * invalidates by bumping nothing — wipe java.io.tmpdir artifacts when
-    * iterating on the trainer itself (the oracle hash-gate catches a
-    * stale component immediately: the replayed chain no longer matches). */
+  /** Persist-or-load the trained component (the IvfIndex.artifact
+    * lifecycle): train-once / serve-many is the production shape — the
+    * component is a d-row MODEL artifact, so every consumer after the
+    * first pays a d-row parquet read instead of the full Gram +
+    * power-iteration chain. Cache key = (source tag, corpus count, corpus
+    * content fingerprint); like the ANN index cache, a code change to the
+    * trainer invalidates by bumping nothing — wipe java.io.tmpdir
+    * artifacts when iterating on the trainer itself (the oracle hash-gate
+    * catches a stale component immediately: the replayed chain no longer
+    * matches). */
   private def loadOrBuildComponent(spark: SparkSession, e: DataFrame,
-                                   srcTag: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(srcTag.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // content-fingerprinted key + atomic publish (the IvfIndex contract)
-    val (n, fp) = IvfIndex.corpusFingerprint(e, "vec_id", "embedding")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-pca-comp-$digest-$n-$fp")
-    IvfIndex.publishOnce(path) { tmp =>
+                                   srcTag: String): DataFrame =
+    spark.read.parquet(IvfIndex.artifact("pca-comp", srcTag, e, "vec_id",
+        "embedding") { tmp =>
       componentFrame(e).write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.parquet(path.toString)
-  }
+    })
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v_knn_brute" -> ((s, dir) =>
@@ -335,51 +329,51 @@ object VectorOps {
       // the exact top-N contract (unrounded decimal cosine, vec_id
       // tie-break) — at scale it IS the IVF/PQ path; everything after is
       // bounded by SERVING constants (N=20 candidates, k=8 picks): the
-      // N×N pair-cosine matrix computes distributedly off hoisted norms,
-      // and the greedy loop takes k 1-row driver actions (the Lloyd
-      // scalar class — the loop is inherently sequential, its state is
-      // k ids, never data). Determinism: rel/sim are decimal-exact-cosine
-      // doubles, the score is a fixed IEEE chain (step 1's empty-set
-      // redundancy term is literally 0.0), max over ≤8 doubles is
-      // order-independent, ties break on vec_id — the oracle unrolls the
-      // identical 8 greedy steps.
+      // N×N pair-cosine matrix computes off hoisted norms, and the greedy
+      // loop runs on the driver over the N relevances and N² similarities
+      // it collects once (the Lloyd model class — the loop is inherently
+      // sequential, its state is k ids, never data). Determinism: rel/sim
+      // are decimal-exact-cosine doubles, the score is the fixed IEEE
+      // chain 0.5·rel − 0.5·ms (step 1's empty-set redundancy term is
+      // literally 0.0), max over ≤8 doubles is order-independent, and the
+      // pick orders as Spark's sort does (signed zeros equal, then vec_id
+      // ascending) — the oracle unrolls the identical 8 greedy steps.
       val e = emb(s, dir)
       val qv: Seq[Float] = e.filter(col("vec_id") === 0L)
         .select("embedding").take(1).head.getSeq[Float](0)
-      val cand = e.filter(col("vec_id") =!= 0L)
+      val top = e.filter(col("vec_id") =!= 0L)
         .select(col("vec_id"), col("embedding"),
           Similarity.cosineToQuery(col("embedding"), qv).as("rel"))
         .orderBy(col("rel").desc, col("vec_id").asc)
         .limit(20)
-        .localCheckpoint()
+      val candRows = top.collect() // BOUNDED: N = 20 rows, the serving constant
+      val cand = s.createDataFrame(java.util.Arrays.asList(candRows: _*),
+        top.schema)
       val pa = cand.select(col("vec_id").as("ka"), col("embedding").as("va"),
         Similarity.decNorm2(col("embedding")).as("na2"))
       val pb = cand.select(col("vec_id").as("kb"), col("embedding").as("vb"),
         Similarity.decNorm2(col("embedding")).as("nb2"))
-      // 20-row × 20-row inequality join — bounded by the serving constant
-      // N², never corpus-shaped (sanctioned in PlanAuditSpec)
-      val psim = pa.join(pb, col("ka") =!= col("kb"))
+      // BOUNDED: a 20-row × 20-row inequality join, N·(N−1) = 380 rows —
+      // the serving constant N², never corpus-shaped
+      val sim = pa.join(pb, col("ka") =!= col("kb"))
         .select(col("ka"), col("kb"),
           Similarity.cosineFromParts(
             Similarity.decDot(col("va"), col("vb")),
             col("na2"), col("nb2")).as("sim"))
-        .localCheckpoint()
-      var picks = Vector.empty[(Int, Long, Double, Double)]
-      for (step <- 1 to 8) {
-        val selIds = picks.map(_._2)
-        val scored =
-          if (selIds.isEmpty) cand.select(col("vec_id"), col("rel"),
-            (lit(0.5) * col("rel") - lit(0.5) * lit(0.0)).as("sc"))
-          else cand.join(
-              psim.filter(col("kb").isin(selIds: _*))
-                .groupBy(col("ka").as("vec_id"))
-                .agg(max(col("sim")).as("ms")),
-              Seq("vec_id"))
-            .filter(!col("vec_id").isin(selIds: _*))
-            .select(col("vec_id"), col("rel"),
-              (lit(0.5) * col("rel") - lit(0.5) * col("ms")).as("sc"))
-        val r = scored.orderBy(col("sc").desc, col("vec_id").asc).take(1).head
-        picks :+= ((step, r.getLong(0), r.getDouble(1), r.getDouble(2)))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val rel = candRows.map(r => r.getLong(0) -> r.getDouble(2))
+      val picks = (1 to 8).foldLeft(Vector.empty[(Int, Long, Double, Double)]) {
+        (picks, step) =>
+          val (id, r, sc) = rel.filterNot(c => picks.exists(_._2 == c._1))
+            .map { case (id, r) =>
+              val ms = if (picks.isEmpty) 0.0
+                else picks.map(p => sim((id, p._2))).reduce(math.max(_, _))
+              (id, r, 0.5 * r - 0.5 * ms)
+            }.reduce { (a, b) =>
+              val o = SQLOrderingUtil.compareDoubles(a._3, b._3)
+              if (o > 0 || (o == 0 && a._1 < b._1)) a else b
+            }
+          picks :+ ((step, id, r, sc))
       }
       import s.implicits._
       picks.toDF("step", "vec_id", "relevance", "mmr_score")
@@ -1227,11 +1221,9 @@ object VectorOps {
       // Round cost is O(N·k²) candidate rows — never corpus². in_base
       // marks edges surviving from the round-0 blocked graph; recall
       // movement vs exact is gated by v_knn_descent_recall.
-      val e = emb(s, dir)
-        .withColumn("n2", Similarity.decNorm2(col("embedding")))
-        .localCheckpoint() // scored against in both rounds
-      val base = knnGraphEdges(s, dir).localCheckpoint()
-      nnDescent(e, base, rounds = 3)
+      val (_, g) = descent(s, dir, 3)
+      val base = g.frames.head
+      g.last
         .join(base.select(col("src"), col("dst"), lit(1).as("ib")),
           Seq("src", "dst"), "left")
         .select(col("src"), col("dst"), round(col("c_raw"), 6).as("cosine"),
@@ -1246,11 +1238,8 @@ object VectorOps {
       // sample rate is the eval's scale knob). The refined candidate set
       // contains every base edge, so per-node refined cosine dominates
       // base and recall_gain >= 0 is an invariant the hash also witnesses.
-      val e = emb(s, dir)
-        .withColumn("n2", Similarity.decNorm2(col("embedding")))
-        .localCheckpoint()
-      val base = knnGraphEdges(s, dir).localCheckpoint()
-      val refined = nnDescent(e, base, rounds = 3)
+      val (e, g) = descent(s, dir, 3)
+      val (base, refined) = (g.frames.head, g.last)
       val sample = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("src"), col("embedding").as("se"),
           col("n2").as("sn"))
@@ -1307,10 +1296,9 @@ object VectorOps {
       // CONVERGENCE-TERMINATED NN-Descent (round-11 verdict ask #4): the
       // paper's own stopping rule — stop when a round's update count
       // drops below δ·N·k (Dong et al. WWW'11 §2.3; δ = 0.12 here) — as
-      // a pure-integer changed-edge test per round, the kcorePeelConv
-      // idiom on the FIFTH iterative family (v_kmeans_conv,
-      // g_pagerank_conv, g_bfs_conv, g_kcore_conv precedents; integer
-      // count, so no FP-tolerance subtlety). Unlike the fixed-3-round
+      // a pure-integer changed-edge count per round, observed on the
+      // round's own checkpoint (Superstep.Probe, the g_bfs_conv idiom;
+      // integer count, so no FP-tolerance subtlety). Unlike the fixed-3-round
       // v_knn_descent, rounds run only until the fresh-probe churn floor:
       // measured stop rounds 5/4/1 at sf0.001/0.01/0.1 (cap 6, never
       // hit — the larger the corpus, the better the cell-blocked base
@@ -1321,15 +1309,9 @@ object VectorOps {
       // one, so the engine's early exit is hash-proved equivalent. The
       // threshold is INTEGER arithmetic (N·36/100, = δ·N·k with k=3) so
       // engine and oracle can never disagree on a float rounding.
-      val e = emb(s, dir)
-        .withColumn("n2", Similarity.decNorm2(col("embedding")))
-        .localCheckpoint()
-      val base = knnGraphEdges(s, dir).localCheckpoint()
-      val n = e.count()
-      val (g, stop) = nnDescentConv(e, base, maxRounds = 6,
-        nB = math.max(n / 16L, 1L), thr = math.max(n * 36L / 100L, 1L))
-      g.select(col("src"), col("dst"), round(col("c_raw"), 6).as("cosine"),
-        lit(stop).cast("int").as("stop_round"))
+      val (_, g) = descent(s, dir, 6, n => Some(math.max(n * 36L / 100L, 1L)))
+      g.last.select(col("src"), col("dst"), round(col("c_raw"), 6).as("cosine"),
+        lit(g.rounds).cast("int").as("stop_round"))
     }),
     "v_knn_descent_append" -> ((s, dir) => {
       // INCREMENTAL NN-DESCENT after a batch append — the lifecycle
@@ -1369,7 +1351,7 @@ object VectorOps {
         .withColumn("is_new", isNew)
         .localCheckpoint()
       val eB = e.filter(!col("is_new"))
-      val nBfrozen = math.max(eB.count() / 16L, 1L)
+      val nBfrozen = probeModulus(eB.count())
       // the OFFLINE artifacts (base-corpus cell graph + the three offline
       // descent-round graphs) load from the persisted index — a
       // deployment runs the O(N·k²) offline descent at build time, and
@@ -1442,24 +1424,61 @@ object VectorOps {
       .select(col("src"), col("dst"), round(col("c_raw"), 6).as("cosine"),
         coalesce(col("m"), lit(0)).cast("int").as("mutual"))
 
-  /** NN-Descent rounds over a (src, dst, c_raw) base graph: reverse-capped
-    * symmetrization, two-hop candidate join, PER-ROUND RANDOM PROBES,
-    * fresh decimal cosine, re-heap. The random probes are the crux: the
-    * cell-blocked base graph is CELL-CLOSED (every edge stays inside one
-    * IVF cell), so pure neighbor-of-neighbor expansion can never reach a
-    * cross-cell true neighbor — measured: 0 of 1500 edges change without
-    * them. The paper starts from a RANDOM graph for exactly this reason;
-    * here each round hashes vectors into random ~8-vector buckets (a
-    * round-salted md5 — deterministic, oracle-replayable) and adds the
-    * within-bucket pairs (~3.5N rows/round) as cross-cell candidates,
-    * which the next round's two-hop join then propagates. Each round
-    * localCheckpoints its output (O(1) lineage in rounds). */
-  private def nnDescent(e: DataFrame, base: DataFrame,
-                        rounds: Int): DataFrame = {
-    val nB = math.max(e.count() / 16L, 1L)
-    var cur = base
-    for (i <- 1 to rounds) cur = descentRound(e, cur, s"d$i", nB)
-    cur
+  /** The v_knn_descent* prologue: the corpus with hoisted norms (scored
+    * against in every round; returned for the recall eval) and
+    * [[nnDescent]] over it from the cell-blocked base graph. The probe
+    * modulus and the convergence threshold (`stopBelow`) derive from the
+    * corpus size n. */
+  private def descent(s: SparkSession, dir: String, rounds: Int,
+                      stopBelow: Long => Option[Long] = _ => None)
+      : (DataFrame, Superstep.Rounds) = {
+    val e = emb(s, dir)
+      .withColumn("n2", Similarity.decNorm2(col("embedding")))
+      .localCheckpoint()
+    val n = e.count()
+    (e, nnDescent(e, knnGraphEdges(s, dir), rounds, probeModulus(n),
+      stopBelow(n)))
+  }
+
+  /** The random-probe modulus for an n-vector corpus: ~16-vector buckets. */
+  private def probeModulus(n: Long): Long = math.max(n / 16L, 1L)
+
+  /** NN-Descent rounds over a (src, dst, c_raw) base graph on
+    * [[Superstep]]: the base graph and every round's graph are
+    * checkpointed (frames.head is the base, O(1) lineage in rounds). Each
+    * round is reverse-capped symmetrization, two-hop candidate join,
+    * PER-ROUND RANDOM PROBES, fresh decimal cosine, re-heap. The random
+    * probes are the crux: the cell-blocked base graph is CELL-CLOSED
+    * (every edge stays inside one IVF cell), so pure neighbor-of-neighbor
+    * expansion can never reach a cross-cell true neighbor — measured: 0
+    * of 1500 edges change without them. The paper starts from a RANDOM
+    * graph for exactly this reason; here each round hashes vectors into
+    * random ~16-vector buckets (a round-salted md5 — deterministic,
+    * oracle-replayable) and adds the within-bucket pairs as cross-cell
+    * candidates, which the next round's two-hop join then propagates.
+    *
+    * With `stopBelow`, the loop stops at the first round that changes
+    * fewer edges (edges absent from the previous round's graph) than that
+    * — the paper's own rule, Dong et al. WWW'11 §2.3. Each round flags
+    * its fresh edges in a `fresh` column, and their count is observed on
+    * the round's checkpoint, so the probe costs no job; the base graph
+    * has no previous round (null count, never stops). `rounds` is the
+    * cap either way; `nB` is the probe modulus ([[descentBuckets]]). */
+  private def nnDescent(e: DataFrame, base: DataFrame, rounds: Int, nB: Long,
+                        stopBelow: Option[Long] = None): Superstep.Rounds = {
+    var round = 0
+    def step(cur: DataFrame) = { round += 1; descentRound(e, cur, s"d$round", nB) }
+    stopBelow match {
+      case None => Superstep.run(base, rounds)(step)
+      case Some(thr) =>
+        Superstep.run(base.withColumn("fresh", lit(null).cast("long")), rounds,
+            Some(Superstep.Probe(sum(col("fresh")),
+              v => v != null && v.asInstanceOf[Long] < thr))) { cur =>
+          step(cur).join(cur.select(col("src"), col("dst"), lit(0L).as("fresh")),
+              Seq("src", "dst"), "left")
+            .withColumn("fresh", coalesce(col("fresh"), lit(1L)))
+        }
+    }
   }
 
   /** Per-round random-probe bucket assignment: round-salted md5 over the
@@ -1473,19 +1492,6 @@ object VectorOps {
       (conv(substring(md5(concat(col("vec_id").cast("string"),
         lit(salt))), 1, 12), 16, 10).cast("long") % nB).as("bk"))
 
-  /** One NN-Descent round: reverse-capped symmetrization, two-hop
-    * candidate join, round-salted random probes, fresh decimal cosine,
-    * re-heap. Candidate dedup is folded INTO the scoring re-heap
-    * (topKPerKeyDistinct — the q_kmv_reagg move): the former
-    * `cand.distinct()` was a full exchange of the O(N·k²) candidate
-    * stream before any row was scored; now duplicate candidates score
-    * redundantly map-side (bounded: the dup factor is ≤ the two-hop
-    * multiplicity, ~k) and the ONLY exchange is the heaps' O(keys·k)
-    * state. Semantics identical: equal (src,dst) pairs always score the
-    * same c_raw (the decimal dot is deterministic), so in-heap dedup on
-    * (key, order) = (src, (c_raw, dst)) drops exactly the duplicate rows
-    * the old distinct dropped. Output localCheckpoints (O(1) lineage in
-    * rounds; consumed by the next round's rev + sym + cand legs). */
   /** Reverse-capped symmetrization of a (src, dst, c_raw) graph: reverse
     * edges re-heaped to the top-3 per (new) src — the paper's ρ cap —
     * then unioned with the forward edges, distinct. Shared by the batch
@@ -1498,6 +1504,19 @@ object VectorOps {
     cur.select("src", "dst").union(rev.select("src", "dst")).distinct()
   }
 
+  /** One NN-Descent round: reverse-capped symmetrization, two-hop
+    * candidate join, round-salted random probes, fresh decimal cosine,
+    * re-heap. Candidate dedup is folded INTO the scoring re-heap
+    * (topKPerKeyDistinct — the q_kmv_reagg move): the former
+    * `cand.distinct()` was a full exchange of the O(N·k²) candidate
+    * stream before any row was scored; now duplicate candidates score
+    * redundantly map-side (bounded: the dup factor is ≤ the two-hop
+    * multiplicity, ~k) and the ONLY exchange is the heaps' O(keys·k)
+    * state. Semantics identical: equal (src,dst) pairs always score the
+    * same c_raw (the decimal dot is deterministic), so in-heap dedup on
+    * (key, order) = (src, (c_raw, dst)) drops exactly the duplicate rows
+    * the old distinct dropped. The caller (Superstep) checkpoints the
+    * output: the next round's rev + sym + cand legs all read it. */
   private def descentRound(e: DataFrame, cur: DataFrame, salt: String,
                            nB: Long): DataFrame = {
     val sym = symEdges(cur).localCheckpoint() // joined to itself below
@@ -1511,9 +1530,8 @@ object VectorOps {
       .union(rp)
       .filter(col("src") =!= col("dst"))
     org.apache.spark.sql.GraftPlanBridge.topKPerKeyDistinct(
-        scoreCandidates(e, cand),
-        Seq("src"), Seq("c_raw" -> false, "dst" -> true), 3)
-      .localCheckpoint()
+      scoreCandidates(e, cand),
+      Seq("src"), Seq("c_raw" -> false, "dst" -> true), 3)
   }
 
   /** Fresh decimal-exact cosine for a (src, dst) candidate stream:
@@ -1528,28 +1546,6 @@ object VectorOps {
         Similarity.cosineFromParts(
           Similarity.decDot(col("ea"), col("eb")),
           col("na"), col("nb")).as("c_raw"))
-
-  /** Convergence-terminated NN-Descent (the paper's own stopping rule:
-    * stop when a round's update count falls below δ·N·k — Dong et al.
-    * WWW'11 §2.3): after each round, the CHANGED-EDGE count (new edges
-    * not present in the previous round's graph) is a pure-integer test,
-    * the kcorePeelConv idiom on the fifth iterative family. Returns the
-    * graph of the stopping round and the 1-based round index at which the
-    * threshold first held (= maxRounds when it never did). */
-  private def nnDescentConv(e: DataFrame, base: DataFrame, maxRounds: Int,
-                            nB: Long, thr: Long): (DataFrame, Int) = {
-    var cur = base
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      round += 1
-      val next = descentRound(e, cur, s"d$round", nB)
-      val changed = next.join(cur, Seq("src", "dst"), "left_anti").count()
-      done = changed < thr
-      cur = next
-    }
-    (cur, round)
-  }
 
   /** Nodes whose edge set differs between two (src, dst, …) graphs:
     * symmetric difference on (src, dst), projected to a 1-column node
@@ -1633,29 +1629,22 @@ object VectorOps {
     (nextFull, changedOut)
   }
 
-  /** Persisted kNN-graph index (the IvfIndex.loadOrBuildSampled lifecycle):
-    * path keyed by source dir + corpus row count + content fingerprint
-    * (IvfIndex.corpusFingerprint — a same-cardinality corpus change
-    * rebuilds instead of serving stale), built once behind an atomic
-    * rename, then served as a plain parquet scan. */
-  private def knnGraphLoadOrBuild(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val (n, fp) = IvfIndex.corpusFingerprint(emb(s, dir), "vec_id", "embedding")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-knn-graph-$digest-$n-$fp")
-    IvfIndex.publishOnce(path) { tmp =>
+  /** Persisted kNN-graph index (the IvfIndex.artifact lifecycle): path
+    * keyed by source dir + corpus content fingerprint (a same-cardinality
+    * corpus change rebuilds instead of serving stale), built once behind
+    * an atomic rename, then served as a plain parquet scan. */
+  private def knnGraphLoadOrBuild(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(IvfIndex.artifact("knn-graph", dir, emb(s, dir), "vec_id",
+        "embedding") { tmp =>
       val knn = knnGraphEdges(s, dir).localCheckpoint()
       withMutual(knn).write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path.toString)
-  }
+    })
 
   /** Offline descent artifacts for v_knn_descent_append: the BASE-corpus
     * cell-blocked graph (cell column retained for the affected-cell
     * split) plus the three offline descent-round graphs. Persisted once
-    * per (dir, base-corpus content fingerprint, nCells, frozen probe
-    * modulus) — the knnGraphLoadOrBuild contract: a deployment runs the
+    * per (dir, nCells, frozen probe modulus, base-corpus content
+    * fingerprint) — the IvfIndex.artifact contract: a deployment runs the
     * O(N·k²) offline descent as an indexing job, and the append path
     * only loads its artifacts; a same-cardinality corpus change rebuilds
     * (content fingerprint), concurrent builders resolve via the atomic
@@ -1664,26 +1653,16 @@ object VectorOps {
   private def descentOfflineLoadOrBuild(s: SparkSession, dir: String,
       eB: DataFrame, aB: DataFrame, nB: Long, nCells: Int)
       : (DataFrame, IndexedSeq[DataFrame]) = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val (n, fp) = IvfIndex.corpusFingerprint(eB, "vec_id", "embedding")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-descent-base-$digest-$n-$fp-$nCells-$nB")
-    IvfIndex.publishOnce(path) { tmp =>
-      val b0 = cellTopkEdges(aB).localCheckpoint()
-      b0.write.mode("overwrite")
-        .parquet(new java.io.File(tmp, "base0").toString)
-      var cur: DataFrame = b0.select("src", "dst", "c_raw")
-      for (i <- 1 to 3) {
-        cur = descentRound(eB, cur, s"d$i", nB)
-        cur.select("src", "dst", "c_raw").write.mode("overwrite")
-          .parquet(new java.io.File(tmp, s"r$i").toString)
-      }
+    val names = "base0" +: (1 to 3).map(i => s"r$i")
+    val path = IvfIndex.artifact("descent-base", dir, eB, "vec_id",
+        "embedding", nCells, nB) { tmp =>
+      nnDescent(eB, cellTopkEdges(aB), 3, nB).frames.zip(names)
+        .foreach { case (g, name) =>
+          g.write.mode("overwrite").parquet(s"$tmp/$name") }
       new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
-    (s.read.parquet(new java.io.File(path, "base0").toString),
-      (1 to 3).map(i =>
-        s.read.parquet(new java.io.File(path, s"r$i").toString)))
+    val frames = names.map(name => s.read.parquet(s"$path/$name"))
+    (frames.head, frames.tail)
   }
 
   /** Shared SQL fragment: exact decimal dot/norm accumulation per vec.

@@ -10,7 +10,8 @@ import graft.TestSpark
   * corpus with an identical row count would be served a stale index when
   * the key was (srcTag, nCells, count) alone. These specs mutate ONE
   * vector at fixed cardinality and prove the index rebuilds, plus the
-  * atomic-publish contract (tmp-sibling + rename, loser deleted). */
+  * atomic-publish contract (tmp-sibling + rename, loser and failed
+  * builds deleted). */
 class IndexCacheSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -29,10 +30,10 @@ class IndexCacheSpec extends AnyFunSuite {
     val (n1, fp1) = IvfIndex.corpusFingerprint(corpus(false), "vec_id", "embedding")
     val (n2, fp2) = IvfIndex.corpusFingerprint(corpus(true), "vec_id", "embedding")
     assert(n1 == 40L && n2 == 40L)
-    // the mutation is in component 2; fingerprint hashes component 1 — so
-    // ALSO mutate component 0 to prove the hashed column drives the key
-    assert(fp1 == fp2, "component-2 mutation must not change the fingerprint " +
-      "(it hashes component 1) — this pins down WHAT the fingerprint reads")
+    // the mutation is in component 2: the fingerprint hashes the whole
+    // vector, so a change past the first component changes the key too
+    assert(fp1 != fp2, "component-2 mutation at fixed cardinality must " +
+      "change the key")
     val shifted = corpus(false).withColumn("embedding",
       when(col("vec_id") === 17L,
         concat(array(element_at(col("embedding"), 1) + lit(1.0f)),
@@ -90,5 +91,30 @@ class IndexCacheSpec extends AnyFunSuite {
     assert(new java.io.File(target2, "winner").exists())
     assert(dir.listFiles().count(_.getName.startsWith("artifact2.tmp-")) == 0,
       "losing builder's tmp dir must be removed")
+  }
+
+  test("publishOnce: a build that throws leaves no tmp sibling and no marker") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pubfail").toFile
+    val target = new java.io.File(dir, "artifact")
+    val e = intercept[IllegalStateException] {
+      IvfIndex.publishOnce(target) { tmp =>
+        val d = new java.io.File(tmp); d.mkdirs()
+        java.nio.file.Files.writeString(new java.io.File(d, "part").toPath, "p")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(e.getMessage == "build failed", "the build's exception must reach the caller")
+    assert(dir.listFiles().count(_.getName.startsWith("artifact.tmp-")) == 0,
+      "a failed build's tmp dir must be removed")
+    assert(!new java.io.File(target, "_SUCCESS").exists())
+    // the next call finds no marker and builds
+    var builds = 0
+    IvfIndex.publishOnce(target) { tmp =>
+      builds += 1
+      val d = new java.io.File(tmp); d.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(d, "_SUCCESS").toPath, "")
+    }
+    assert(builds == 1 && new java.io.File(target, "_SUCCESS").exists())
+    assert(dir.listFiles().map(_.getName).sorted.sameElements(Array("artifact")))
   }
 }

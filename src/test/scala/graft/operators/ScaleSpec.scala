@@ -383,6 +383,42 @@ class ScaleSpec extends AnyFunSuite {
     assert(jobs <= 4 * 3 + 4, s"$jobs jobs for 3 rounds")
   }
 
+  test("v_knn_descent_conv: the changed-edge probe adds no job to its round") {
+    // the changed-edge count is observed on the round's own checkpoint
+    // (Superstep); a separate left_anti + count() per round (the old form)
+    // adds 3 jobs a round: 93 jobs for this query
+    val (df, jobs) =
+      jobsOf(graft.SparkEntry.queries("v_knn_descent_conv")(spark, dir))
+    val rounds = df.select("stop_round").distinct().collect().map(_.getInt(0))
+    assert(rounds.sameElements(Array(5)), rounds.mkString(","))
+    // 78 measured: 15 jobs a round, set-up included
+    assert(jobs <= 16 * 5 + 3, s"$jobs jobs for 5 rounds")
+  }
+
+  test("t_classifier_train: one action per round, the loss observed beside it") {
+    // each round is one gradient collect with the sse observed on err; a
+    // checkpointed err and a separate sse action (the old form) cost 42
+    val (df, jobs) =
+      jobsOf(graft.SparkEntry.queries("t_classifier_train")(spark, dir))
+    val mse = df.select("mse_r1", "mse_r2", "mse_r3").distinct().collect()
+    assert(mse.length == 1)
+    val Seq(m1, m2, m3) = mse.head.toSeq.map(_.asInstanceOf[Double])
+    assert(m1 > m2 && m2 > m3 && m3 > 0.0, s"loss must fall: $m1, $m2, $m3")
+    // 33 measured, set-up and the accuracy pass included
+    assert(jobs <= 36, s"$jobs jobs for 3 rounds")
+  }
+
+  test("v_mmr: the greedy picks run on the driver") {
+    // the 20 candidates and their 380 pair similarities are collected
+    // once; a take(1) per greedy step (the old form) launches 29 jobs
+    val (df, jobs) = jobsOf(graft.SparkEntry.queries("v_mmr")(spark, dir))
+    val picks = df.collect()
+    assert(picks.map(_.getInt(0)).sorted.sameElements(1 to 8))
+    assert(picks.map(_.getLong(1)).distinct.length == 8)
+    // 7 measured: the query vector, the candidate and the pair collects
+    assert(jobs <= 8, s"$jobs jobs")
+  }
+
   test("reporting e2e load path scales linearly in staged pages") {
     // the round-10 verdict's ask #5: p_reporting_e2e only ever ran at the
     // ~10-row bundled fixture; this gate synthesizes reference-shaped
