@@ -155,18 +155,51 @@ object IvfIndex {
     * count + content xor), so a changed corpus rebuilds rather than
     * serving a stale artifact even at identical cardinality. It is built
     * once through [[publishOnce]] (the build must leave a root `_SUCCESS`
-    * marker, as a parquet write does) and its path returned; every later
-    * call is the fingerprint scan plus whatever read the caller does. */
+    * marker, as a parquet write does) and its path returned. The
+    * fingerprint is memoized ([[memoFingerprint]]), so a later call on an
+    * unchanged corpus costs no job before the caller's own read. */
   def artifact(kind: String, srcTag: String, emb: DataFrame, idCol: String,
                vecCol: String, params: Any*)(build: String => Unit): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(srcTag.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val (n, fp) = corpusFingerprint(emb, idCol, vecCol)
+    val (n, fp) = memoFingerprint(emb, idCol, vecCol)
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       (Seq("graft", kind, digest) ++ params ++ Seq(n, fp)).mkString("-"))
     publishOnce(path)(build)
     path.toString
   }
+
+  /** [[corpusFingerprint]] once per JVM for a corpus whose content is
+    * pinned by its plan and files: the key is the canonicalized analyzed
+    * plan (what `sameResult` compares, so two loads of one table match)
+    * plus the name, length and mtime of every input file, so rewriting a
+    * source file at the same path misses. Only a deterministic plan whose
+    * leaves are all file scans or local relations is memoized; any other
+    * leaf (a checkpoint, an RDD, a stream) has content the key cannot
+    * see, and such a corpus is scanned on every call as before. */
+  private def memoFingerprint(emb: DataFrame, idCol: String,
+                              vecCol: String): (Long, String) = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plan = emb.queryExecution.analyzed
+    val pinned = plan.deterministic && plan.collectLeaves().forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _: LocalRelation => true
+      case _ => false
+    }
+    val key = if (!pinned) None
+      else graft.Tables.stamp(emb.sparkSession, emb.inputFiles.toSeq)
+        .map((plan.canonicalized, _, idCol, vecCol))
+    key.flatMap(k => Option(fingerprints.get(k))).getOrElse {
+      val r = corpusFingerprint(emb, idCol, vecCol)
+      key.foreach(fingerprints.putIfAbsent(_, r))
+      r
+    }
+  }
+
+  private val fingerprints = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      Seq[(String, Long, Long)], String, String), (Long, String)]()
 
   /** Persisted-index lifecycle: load the sampled-centroid assignment from a
     * parquet index table, building it ONCE if absent — the production
@@ -178,7 +211,7 @@ object IvfIndex {
     * the corpus bucketed by `cell`; a probe reads nprobe/nCells of it). */
   def loadOrBuildSampled(spark: SparkSession, emb: DataFrame, srcTag: String,
                          idCol: String, vecCol: String, nCells: Int): DataFrame =
-    spark.read.parquet(artifact("ivf-index", srcTag, emb, idCol, vecCol,
+    graft.Tables.parquet(spark, artifact("ivf-index", srcTag, emb, idCol, vecCol,
         nCells) { tmp =>
       assignSampled(emb, idCol, vecCol, nCells)
         .write.mode("overwrite").parquet(tmp)

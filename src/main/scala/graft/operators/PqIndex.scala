@@ -155,7 +155,8 @@ object PqIndex {
         .write.mode("overwrite").parquet(s"$tmp/codes")
       new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
-    (spark.read.parquet(s"$base/codebook"), spark.read.parquet(s"$base/codes"))
+    (graft.Tables.parquet(spark, s"$base/codebook"),
+      graft.Tables.parquet(spark, s"$base/codes"))
   }
 
   /** IVF-PQ composition — the production billion-scale layout: IVF cells

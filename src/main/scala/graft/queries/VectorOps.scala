@@ -170,7 +170,7 @@ object VectorOps {
     * matches). */
   private def loadOrBuildComponent(spark: SparkSession, e: DataFrame,
                                    srcTag: String): DataFrame =
-    spark.read.parquet(IvfIndex.artifact("pca-comp", srcTag, e, "vec_id",
+    Tables.parquet(spark, IvfIndex.artifact("pca-comp", srcTag, e, "vec_id",
         "embedding") { tmp =>
       componentFrame(e).write.mode("overwrite").parquet(tmp)
     })
@@ -1634,7 +1634,7 @@ object VectorOps {
     * corpus change rebuilds instead of serving stale), built once behind
     * an atomic rename, then served as a plain parquet scan. */
   private def knnGraphLoadOrBuild(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(IvfIndex.artifact("knn-graph", dir, emb(s, dir), "vec_id",
+    Tables.parquet(s, IvfIndex.artifact("knn-graph", dir, emb(s, dir), "vec_id",
         "embedding") { tmp =>
       val knn = knnGraphEdges(s, dir).localCheckpoint()
       withMutual(knn).write.mode("overwrite").parquet(tmp)
@@ -1661,7 +1661,7 @@ object VectorOps {
           g.write.mode("overwrite").parquet(s"$tmp/$name") }
       new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
-    val frames = names.map(name => s.read.parquet(s"$path/$name"))
+    val frames = names.map(name => Tables.parquet(s, s"$path/$name"))
     (frames.head, frames.tail)
   }
 

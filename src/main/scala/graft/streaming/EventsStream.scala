@@ -23,7 +23,12 @@ object EventsStream {
     * (read as ns Long, see Tables.load) → truncated to µs TimestampType. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val physical = spark.read.parquet(path).schema
+    // only the schema is needed here: Tables.parquet resolves it once per
+    // JVM (keyed on the file's name, length and mtime and the schema
+    // confs), so a drain after the first pays no footer-reading job; a
+    // stale entry would hand the stream a wrong schema, which is why the
+    // key holds the file stamp and not the path alone
+    val physical = graft.Tables.parquet(spark, path).schema
     // events.parquet is a single FILE in the driver testdata but a
     // DIRECTORY of part files in gen_scale.py corpora (the sf1 gate found
     // the single-layout glob reading ZERO files there — an empty stream,

@@ -64,6 +64,54 @@ class IndexCacheSpec extends AnyFunSuite {
     assert(a1again.except(a1).count() == 0 && a1.except(a1again).count() == 0)
   }
 
+  test("a warm loadOrBuildSampled call launches no job") {
+    // the fingerprint is memoized on the corpus plan (an equal local
+    // relation here) and the artifact's schema on its files: the warm call
+    // runs neither the fingerprint aggregate nor the schema-inference read
+    val tag = s"idxcache-warm-${System.nanoTime()}"
+    val cold = IvfIndex.loadOrBuildSampled(spark, corpus(false), tag, "vec_id", "embedding", 4)
+    try {
+      val (a, jobs) = TestSpark.jobsOf(
+        IvfIndex.loadOrBuildSampled(spark, corpus(false), tag, "vec_id", "embedding", 4))
+      assert(jobs == 0, s"$jobs jobs for a warm call")
+      assert(a.count() == 40L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(new java.net.URI(cold.inputFiles.head)).getParentFile)
+  }
+
+  test("a one-component rewrite of the source file at the same path changes the key") {
+    // the corpus is a parquet file read through Tables.parquet; the
+    // rewrite keeps the file's path and row count and changes component 2
+    // of one vector, so only the file stamp (length, mtime) can tell the
+    // plan-keyed fingerprint memo that the content moved
+    val root = java.nio.file.Files.createTempDirectory("graft-idxsrc").toFile
+    try {
+      val file = new java.io.File(root, "emb/part-0.parquet")
+      def publish(mutated: Boolean): Unit = {
+        val staged = new java.io.File(root, s"staged-$mutated")
+        corpus(mutated).coalesce(1).write.parquet(staged.toString)
+        val part = staged.listFiles().find(_.getName.endsWith(".parquet")).get
+        file.getParentFile.mkdirs()
+        java.nio.file.Files.copy(part.toPath, file.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      def key(): String = IvfIndex.artifact("idxsrc-spec",
+          s"idxsrc-spec-${root.getName}",
+          graft.Tables.parquet(spark, file.getParent), "vec_id", "embedding") {
+        tmp => spark.range(1).write.parquet(tmp) }
+      publish(mutated = false)
+      val k1 = key()
+      assert(key() == k1)
+      publish(mutated = true)
+      val k2 = key()
+      assert(k2 != k1, "a rewritten source file must move the artifact key")
+      val (n, fp) = IvfIndex.corpusFingerprint(corpus(true), "vec_id", "embedding")
+      assert(k2.endsWith(s"-$n-$fp"), k2)
+      Seq(k1, k2).foreach(k =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(k)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
   test("publishOnce: marker short-circuits, rename loser is cleaned up") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pubonce").toFile
     val target = new java.io.File(dir, "artifact")
