@@ -41,13 +41,16 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("every read is a fresh relation: a warm self-join keeps distinct attributes") {
-    val dir = "/root/testdata/sf0.001"
-    val a = Tables.load(spark, dir, "nation")
-    val b = Tables.load(spark, dir, "nation")
-    val ids = (df: org.apache.spark.sql.DataFrame) =>
-      df.queryExecution.analyzed.output.map(_.exprId).toSet
-    assert(ids(a).intersect(ids(b)).isEmpty)
-    val n = a.count()
-    assert(a.join(b, a("n_nationkey") === b("n_nationkey")).count() == n)
+    val dir = Files.createTempDirectory("graft-tables").toFile
+    try {
+      spark.range(0, 25).select(col("id").as("n_nationkey"))
+        .write.parquet(s"$dir/nation.parquet")
+      val a = Tables.load(spark, dir.toString, "nation")
+      val b = Tables.load(spark, dir.toString, "nation") // a memo hit
+      val ids = (df: org.apache.spark.sql.DataFrame) =>
+        df.queryExecution.analyzed.output.map(_.exprId).toSet
+      assert(ids(a).intersect(ids(b)).isEmpty)
+      assert(a.join(b, a("n_nationkey") === b("n_nationkey")).count() == 25L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }
