@@ -80,4 +80,19 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the session confs `kvs` set, then put every key back
+    * as it was, also when `body` throws: a key that was set gets its old
+    * value, a key that was unset is unset again (so it reads its default,
+    * not a value pinned here). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

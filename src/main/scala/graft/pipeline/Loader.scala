@@ -163,13 +163,12 @@ object Loader {
           // evaluate BEFORE the overwrite: `touched` reads the pre-merge target
           val emptied = touched
             .except(staged.select(partCols.map(col): _*).distinct()).collect()
-          val conf = spark.conf
-          val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-          conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           // one file per rewritten partition, not one per task (guide §6)
-          try staged.repartition(partCols.map(col): _*)
-            .write.mode("overwrite").insertInto(table)
-          finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+          graft.Engine.withConf(spark,
+              "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+            staged.repartition(partCols.map(col): _*)
+              .write.mode("overwrite").insertInto(table)
+          }
           emptied.foreach { r =>
             // a null partition value is addressed by Hive's default-partition
             // sentinel — that string IS the stored partition value, so the
@@ -266,15 +265,12 @@ object Loader {
       // insertInto is positional and the Seq-join hoists the join column
       // first: restore the table's column order (partition column last)
       .select(tableCols.map(col): _*)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // hash-distribute by the partition column so each rewritten partition
     // receives one file instead of one per upstream task (guide §6)
-    try survivors.repartition(col(partCol)).write.mode("overwrite")
-      .insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.Engine.withConf(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      survivors.repartition(col(partCol)).write.mode("overwrite")
+        .insertInto(table)
     }
     // partitions fully emptied by the erasure never received a row above —
     // drop them explicitly. Bounded: the collect is the affected-partition

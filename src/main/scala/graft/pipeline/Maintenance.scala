@@ -50,12 +50,11 @@ object Maintenance {
         .join(broadcast(victims.alias("p")), cond, "left_semi")
         .repartition(partCols.map(col): _*)
       Loader.writeViaStage(spark, rows, table) { staged =>
-        val conf = spark.conf
-        val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try staged.repartition(partCols.map(col): _*)
-          .write.mode("overwrite").insertInto(table)
-        finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        graft.Engine.withConf(spark,
+            "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+          staged.repartition(partCols.map(col): _*)
+            .write.mode("overwrite").insertInto(table)
+        }
       }
     }
     victims.unpersist()

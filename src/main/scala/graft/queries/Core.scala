@@ -1726,11 +1726,10 @@ object Core {
       // a full distributed query, and the hash gates the accumulation.
       // Cents are exact integers, so += across iterations is associative.
       t(s, dir, "orders").createOrReplaceTempView("script_orders")
-      // save/restore like the partitionOverwriteMode sites: the scripting
-      // flag must not leak into every later query on the shared session
-      val prevScripting = s.conf.getOption("spark.sql.scripting.enabled")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      try s.sql(
+      // scoped like the partitionOverwriteMode sites: the scripting flag
+      // must not leak into every later query on the shared session
+      graft.Engine.withConf(s, "spark.sql.scripting.enabled" -> "true") {
+        s.sql(
         """BEGIN
              DECLARE i INT DEFAULT 0;
              DECLARE n_total BIGINT DEFAULT 0;
@@ -1745,9 +1744,6 @@ object Core {
              END WHILE;
              SELECT n_total AS n_orders, cents AS sum_cents;
            END""")
-      finally prevScripting match {
-        case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-        case None => s.conf.unset("spark.sql.scripting.enabled")
       }
     }),
     "q_higher_order" -> ((s, dir) =>

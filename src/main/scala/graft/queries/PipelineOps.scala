@@ -168,7 +168,8 @@ object PipelineOps {
       // and the NULL semantics. At 100 TB mergeSchema is a footer-only
       // operation (schema union across files, no data read).
       import org.apache.spark.sql.functions.{coalesce => coal, count => cnt, lit => l, sum => sm}
-      val root = java.nio.file.Files.createTempDirectory("graft-evolve-").toString
+      // one fixed root in the session's warehouse, overwritten per call
+      val root = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_evolve"
       val o = Tables.load(s, dir, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -213,14 +214,10 @@ object PipelineOps {
       val patch = ev.filter(col("day") === l(day0))
         .withColumn("value", col("value") * 2)
         .repartition(col("day"))
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
+      graft.Engine.withConf(s,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         patch.write.mode("overwrite").insertInto(table)
         patch.write.mode("overwrite").insertInto(table) // idempotent re-run
-      } finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       s.table(table).groupBy("day")
         .agg(cnt(l(1)).as("n_events"),

@@ -15,11 +15,63 @@ import graft.streaming.EventsStream
   */
 object StreamingOps {
 
+  /** The events' (user_id, ts) replayed as 4 event-time micro-batches
+    * ([[EventsStream.replay]]) plus `sentinelBatches` far-future
+    * watermark-driver batches of one row each (user_id -1, 10·j days past
+    * the corpus max). 2 sentinels drain ONE stateful layer (the first
+    * lifts the watermark past every real deadline at its batch's end, the
+    * second's data batch fires the expired timers, with no reliance on
+    * no-data micro-batches); every additional CHAINED stateful operator
+    * adds one batch of flush latency, since its input only arrives when
+    * the upstream layer evicts, so k stateful layers need k+1 sentinels. */
+  private def sessionReplay[T](s: SparkSession, dir: String,
+      sentinelBatches: Int)(body: (() => DataFrame) => T): T = {
+    import s.implicits._
+    val batch = graft.Tables.load(s, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id").cast("long").as("user_id"), col("ts"))
+    val (chunk, maxUs) = EventsStream.timeSlices(batch, 4)
+    val sentinels = (1 to sentinelBatches).map(j => Seq((-1L,
+      new java.sql.Timestamp(maxUs / 1000L + j * 10 * 86400000L)))
+      .toDF("user_id", "ts"))
+    EventsStream.replay(s, batch, chunk, nChunks = 4, sentinels)(body)
+  }
+
+  /** The outer stream-stream joins' shared prologue: the events replayed
+    * as 4 event-time micro-batches plus 2 sentinel batches, each side of
+    * [[EventsStream.clickErrorJoin]] its own stream over the one staging,
+    * drained to `sink` with the sentinel rows dropped. Each sentinel batch
+    * carries one far-future row PER side ('click' and 'error'): a
+    * stream-stream join's watermark is the min over BOTH its watermark
+    * nodes, so a sentinel that advanced only one side would never move the
+    * joint watermark and the outer null rows would sit in state forever. */
+  private def outerJoin(s: SparkSession, dir: String, joinType: String,
+                        sink: String): DataFrame = {
+    import s.implicits._
+    val batch = graft.Tables.load(s, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("event_id").cast("long").as("event_id"), col("ts"),
+        col("user_id").cast("long").as("user_id"), col("event_type"))
+    val (chunk, maxUs) = EventsStream.timeSlices(batch, 4)
+    val sentinels = Seq(10, 20).zipWithIndex.map { case (days, j) =>
+      val far = new java.sql.Timestamp(maxUs / 1000L + days * 86400000L)
+      Seq((-1L - 2 * j, far, -1L, "click"), (-2L - 2 * j, far, -1L, "error"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+    }
+    EventsStream.replay(s, batch, chunk, nChunks = 4, sentinels) { open =>
+      val joined = EventsStream.clickErrorJoin(
+        open().filter(col("event_type") === "click"),
+        open().filter(col("event_type") === "error"),
+        windowSec = 600L, joinType = joinType)
+      EventsStream.runToMemory(s, joined, sink, "append")
+    }.filter(col("user_id") >= 0) // drop the watermark-driver sentinels
+  }
+
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s_cdc_stream" -> ((s, _) => {
       // STREAMING CDC consumption: the change feed arrives as two
-      // seq-ordered micro-batches (a file-source replay with pinned
-      // mtimes, the EventsStream staging idiom) and foreachBatch applies
+      // seq-ordered micro-batches (an EventsStream.replay with chunk
+      // `seq >= cut`) and foreachBatch applies
       // each through the same latest-op-wins I/U/D merge the batch path
       // uses (p_cdc). Because every seq in batch 2 exceeds every seq in
       // batch 1, sequential per-batch application provably equals the
@@ -45,27 +97,13 @@ object StreamingOps {
       val seqs = changes.select("seq").distinct().orderBy("seq")
         .collect().map(_.getLong(0))
       val cut = seqs(seqs.length / 2)
-      val root = java.nio.file.Files.createTempDirectory("graft-cdcstream-")
-      val streamDir = root.resolve("stream")
-      java.nio.file.Files.createDirectory(streamDir)
-      def stage(df: org.apache.spark.sql.DataFrame, i: Int): Unit = {
-        val st = root.resolve(s"stage_$i").toString
-        df.coalesce(1).write.mode("overwrite").parquet(st)
-        val part = new java.io.File(st).listFiles()
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-        val dst = streamDir.resolve(f"chunk_$i%02d.parquet").toFile
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1600000000000L + i * 60000L)
+      EventsStream.replay(s, changes, col("seq") >= cut, nChunks = 2) { open =>
+        val q = open().writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            Ld.applyCdc(batch.sparkSession, batch, table, pk)
+          }.start()
+        try q.processAllAvailable() finally q.stop()
       }
-      stage(changes.filter(col("seq") < cut), 0)
-      stage(changes.filter(col("seq") >= cut), 1)
-      val q = s.readStream.schema(cdcSchema)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Ld.applyCdc(batch.sparkSession, batch, table, pk)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
       s.table(table).select("dag_id", "dag_run_id", "state")
         .orderBy(col("dag_id"), col("dag_run_id"))
     }),
@@ -86,26 +124,32 @@ object StreamingOps {
       graft.pipeline.Catalog.dropManaged(s, table)
       s.sql(s"""CREATE TABLE $table (hour_ts TIMESTAMP, event_type STRING,
                 n_events BIGINT, sum_value DECIMAL(18,2)) USING parquet""")
-      val stream = EventsStream.readEventsChunkedReplayValue(s, dir, nChunks = 4)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val ss = batch.sparkSession
-          val partial = batch.groupBy(
-              date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast(DecimalType(18, 2))).as("sum_value"))
-          val existing = ss.table(table)
-          val combined = partial.as("d")
-            .join(existing.as("e"), Seq("hour_ts", "event_type"), "left")
-            .select(col("hour_ts"), col("event_type"),
-              (col("d.n_events") + coalesce(col("e.n_events"), lit(0L)))
-                .as("n_events"),
-              (col("d.sum_value") + coalesce(col("e.sum_value"),
-                lit(java.math.BigDecimal.ZERO))).as("sum_value"))
-          graft.pipeline.Loader.upsert(ss, combined, table,
-            Seq("hour_ts", "event_type"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+      // stateless: no watermark to flush, so no sentinel batches
+      val ev = graft.Tables.load(s, dir, "events")
+        .filter(col("ts").isNotNull)
+        .select(col("ts"), col("event_type"), col("value"))
+      val (chunk, _) = EventsStream.timeSlices(ev, 4)
+      EventsStream.replay(s, ev, chunk, nChunks = 4) { open =>
+        val q = open().writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val ss = batch.sparkSession
+            val partial = batch.groupBy(
+                date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
+              .agg(count(lit(1)).as("n_events"),
+                sum(col("value").cast(DecimalType(18, 2))).as("sum_value"))
+            val existing = ss.table(table)
+            val combined = partial.as("d")
+              .join(existing.as("e"), Seq("hour_ts", "event_type"), "left")
+              .select(col("hour_ts"), col("event_type"),
+                (col("d.n_events") + coalesce(col("e.n_events"), lit(0L)))
+                  .as("n_events"),
+                (col("d.sum_value") + coalesce(col("e.sum_value"),
+                  lit(java.math.BigDecimal.ZERO))).as("sum_value"))
+            graft.pipeline.Loader.upsert(ss, combined, table,
+              Seq("hour_ts", "event_type"))
+          }.start()
+        try q.processAllAvailable() finally q.stop()
+      }
       s.table(table).select(col("hour_ts"), col("event_type"),
         col("n_events"), col("sum_value").cast("double").as("sum_value"))
     }),
@@ -188,18 +232,18 @@ object StreamingOps {
     "s_sessionize_timeout" -> ((s, dir) => {
       // timeout-driven sessionization, oracle-gated end-to-end: the events
       // table replays as 4 time-ordered micro-batches + 2 far-future
-      // sentinel batches (readEventsChunkedReplay), so EventTimeTimeout
+      // sentinel batches (sessionReplay), so EventTimeTimeout
       // actually FIRES across batch boundaries and every real session is
       // closed — by an in-batch gap or by its timer — before the drain
       // ends. The append-mode output then equals the batch gap rule
       // (new session when idle > 30 min), which is the oracle.
-      val ev = EventsStream.readEventsChunkedReplay(s, dir, nChunks = 4)
-        .withWatermark("ts", "0 seconds")
-      val closed = graft.streaming.StatefulOps
-        .streamingSessionize(s, ev, gapSec = 1800L)
-      EventsStream.runToMemory(s, closed.toDF(),
-        "s_sessionize_timeout_sink", "append")
-        .filter(col("user_id") >= 0) // drop the watermark-driver sentinels
+      sessionReplay(s, dir, sentinelBatches = 2) { open =>
+        val ev = open().withWatermark("ts", "0 seconds")
+        val closed = graft.streaming.StatefulOps
+          .streamingSessionize(s, ev, gapSec = 1800L)
+        EventsStream.runToMemory(s, closed.toDF(),
+          "s_sessionize_timeout_sink", "append")
+      }.filter(col("user_id") >= 0) // drop the watermark-driver sentinels
     }),
     "s_stream_outer" -> ((s, dir) => {
       // LEFT-OUTER stream-stream join, oracle-gated end-to-end: unmatched
@@ -207,23 +251,12 @@ object StreamingOps {
       // when the JOINT watermark proves the click's match window closed —
       // impossible in a single-batch drain (LeftOuterJoinSpec documents
       // why), so both sides replay as time-ordered micro-batches with
-      // far-future sentinel rows of BOTH event types
-      // (readEventsChunkedReplayFull): sentinel batch 1 lifts both
-      // watermark nodes past every real click's deadline, sentinel batch 2
-      // triggers the eviction scan that flushes the null-error rows. The
-      // drained append output then equals the batch LEFT JOIN.
-      // stage the replay ONCE; each join side opens its own independent
-      // streaming source over the same staged files (halves staging cost)
-      val (path, schema) =
-        EventsStream.stageEventsChunkedReplayFull(s, dir, nChunks = 4)
-      val clicks = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "click")
-      val errors = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "error")
-      val joined = EventsStream.clickErrorJoin(clicks, errors,
-        windowSec = 600L, joinType = "left_outer")
-      EventsStream.runToMemory(s, joined, "s_stream_outer_sink", "append")
-        .filter(col("user_id") >= 0) // drop the watermark-driver sentinels
+      // far-future sentinel rows of BOTH event types (outerJoin):
+      // sentinel batch 1 lifts both watermark nodes past every real
+      // click's deadline, sentinel batch 2 triggers the eviction scan that
+      // flushes the null-error rows. The drained append output then
+      // equals the batch LEFT JOIN.
+      outerJoin(s, dir, "left_outer", "s_stream_outer_sink")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_rows"),
           count(col("error_id")).as("n_matched"),
@@ -237,16 +270,7 @@ object StreamingOps {
       // s_stream_outer (both event types in each sentinel batch, so both
       // watermark nodes lift and the eviction scan flushes BOTH state
       // stores); the drained append output equals the batch FULL JOIN.
-      val (path, schema) =
-        EventsStream.stageEventsChunkedReplayFull(s, dir, nChunks = 4)
-      val clicks = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "click")
-      val errors = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "error")
-      val joined = EventsStream.clickErrorJoin(clicks, errors,
-        windowSec = 600L, joinType = "full_outer")
-      EventsStream.runToMemory(s, joined, "s_stream_full_outer_sink", "append")
-        .filter(col("user_id") >= 0) // drop the watermark-driver sentinels
+      outerJoin(s, dir, "full_outer", "s_stream_full_outer_sink")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("click_id").isNotNull && col("error_id").isNotNull,
@@ -261,16 +285,7 @@ object StreamingOps {
       // the joint watermark proves no click's window can still claim
       // them; matched rows emit as in the inner join. Same sentinel
       // machinery; drained append output equals the batch RIGHT JOIN.
-      val (path, schema) =
-        EventsStream.stageEventsChunkedReplayFull(s, dir, nChunks = 4)
-      val clicks = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "click")
-      val errors = EventsStream.readStagedReplay(s, path, schema)
-        .filter(col("event_type") === "error")
-      val joined = EventsStream.clickErrorJoin(clicks, errors,
-        windowSec = 600L, joinType = "right_outer")
-      EventsStream.runToMemory(s, joined, "s_stream_right_outer_sink", "append")
-        .filter(col("user_id") >= 0) // drop the watermark-driver sentinels
+      outerJoin(s, dir, "right_outer", "s_stream_right_outer_sink")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("click_id").isNotNull, 1L).otherwise(0L)).as("n_matched"),
@@ -302,38 +317,30 @@ object StreamingOps {
       val maxTs = graft.Tables.load(s, dir, "events")
         .agg(max(col("ts"))).first().getTimestamp(0)
       val bound = new java.sql.Timestamp(maxTs.getTime + 1800 * 1000L)
-      val ev = EventsStream.readEventsChunkedReplay(s, dir, nChunks = 4,
-          sentinelBatches = 3)
-        .withWatermark("ts", "0 seconds")
-      val sessions = ev
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-      val hourly = sessions
-        .groupBy(window(col("session_window"), "1 hour"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(col("n_events")).as("n_session_events"))
-        .select(col("window.start").as("hour_ts"), col("n_sessions"),
-          col("n_session_events"))
-      EventsStream.runToMemory(s, hourly, "s_session_hourly_sink", "append")
-        .filter(col("hour_ts") <= lit(bound))
+      sessionReplay(s, dir, sentinelBatches = 3) { open =>
+        val sessions = open().withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+        val hourly = sessions
+          .groupBy(window(col("session_window"), "1 hour"))
+          .agg(count(lit(1)).as("n_sessions"),
+            sum(col("n_events")).as("n_session_events"))
+          .select(col("window.start").as("hour_ts"), col("n_sessions"),
+            col("n_session_events"))
+        EventsStream.runToMemory(s, hourly, "s_session_hourly_sink", "append")
+      }.filter(col("hour_ts") <= lit(bound))
     }),
     "s_tws_stats" -> ((s, dir) => {
       // Spark 4 transformWithState (the [flat]mapGroupsWithState
       // successor): typed ValueState per event type, RocksDB state store
       // (TWS requires its column-family API; conf scoped to this drain
       // and restored after). Single-batch emission = the batch aggregate.
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+      graft.Engine.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val ev = EventsStream.readEvents(s, dir)
         EventsStream.runToMemory(s,
           graft.streaming.StatefulOps.streamingTypeStatsTws(s, ev).toDF(),
           "s_tws_stats_sink", "update")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
     "s_dedup" -> ((s, dir) => {

@@ -821,9 +821,9 @@ object VectorOps {
         queryId = 0L, k = 10, nCells = 16, nprobe = 4)
     }),
     "s_knn_ingest" -> ((s, dir) => {
-      // STREAMING INDEX INGEST — the IVF write path run continuously (the
-      // s_cdc_stream pinned-mtime file-replay staging idiom on the vector
-      // modality): the corpus arrives as 4 micro-batches (vec_id mod 4);
+      // STREAMING INDEX INGEST — the IVF write path run continuously (an
+      // EventsStream.replay, as in s_cdc_stream, on the vector modality):
+      // the corpus arrives as 4 micro-batches (vec_id mod 4);
       // foreachBatch assigns each batch against the FROZEN centroids
       // (assignSampledWith — one batch-sized codegen'd argmax, never a
       // rebuild) and appends to the index table. After the drain, probing
@@ -837,28 +837,15 @@ object VectorOps {
       val e = emb(s, dir)
       val table = "rpt_s_knn_ingest_idx"
       graft.pipeline.Catalog.dropManaged(s, table)
-      val root = java.nio.file.Files.createTempDirectory("graft-knn-ingest-")
-      val streamDir = root.resolve("stream")
-      java.nio.file.Files.createDirectory(streamDir)
-      for (i <- 0 until 4) {
-        val st = root.resolve(s"stage_$i").toString
-        e.filter(pmod(col("vec_id"), lit(4)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(st)
-        val part = new java.io.File(st).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = streamDir.resolve(f"chunk_$i%02d.parquet").toFile
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1600000000000L + i * 60000L)
+      graft.streaming.EventsStream.replay(s, e, pmod(col("vec_id"), lit(4)),
+          nChunks = 4) { open =>
+        val q = open().writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            IvfIndex.assignSampledWith(batch, e, "vec_id", "embedding", 16)
+              .write.mode("append").format("parquet").saveAsTable(table)
+          }.start()
+        try q.processAllAvailable() finally q.stop()
       }
-      val q = s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfIndex.assignSampledWith(batch, e, "vec_id", "embedding", 16)
-            .write.mode("append").format("parquet").saveAsTable(table)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
       val query = e.filter(col("vec_id") === 0L)
         .select("embedding").first().getSeq[Float](0)
       IvfIndex.probeSampled(s.table(table), e, "vec_id", "embedding", query,

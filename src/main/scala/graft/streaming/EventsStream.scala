@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
@@ -155,170 +155,94 @@ object EventsStream {
       }
       .start()
 
-  /** Replay the events table as a MULTI-batch stream: the rows are split
-    * into `nChunks` time-ordered parquet files (chunk i holds the i-th slice
-    * of the event-time range) plus two far-future sentinel rows
-    * (user_id = -1), and read back with `maxFilesPerTrigger = 1` so each
-    * file is its own micro-batch in event-time order.
+  /** Replay a bounded `batch` as a MULTI-batch stream, one file per
+    * micro-batch, for as long as `body` runs. `chunk` assigns every row an
+    * id in `[0, nChunks)` (a boolean reads as 0/1; a row whose id is null
+    * is dropped); chunk `i` becomes micro-batch `i`, and each `tail` frame
+    * (schema-identical to `batch`) one more batch after the last chunk.
+    * `body` gets a function that opens a new `maxFilesPerTrigger = 1`
+    * stream over the staged files, so a multi-input query (both sides of a
+    * stream-stream join) stages once and opens one source per side.
     *
-    * This is the harness that lets TIMEOUT-driven state machines be
-    * oracle-gated: timeouts only fire across batch boundaries, and the
-    * sentinels advance the event-time watermark past every real session's
-    * deadline, so by the final batch all keyed state has been flushed and
-    * the append-mode drain equals the batch formulation. Because the split
-    * is by event time, no row is ever late relative to the watermark
-    * (batch k's minimum exceeds batch k-1's maximum = the watermark), so a
-    * 0-second watermark delay loses nothing and the replay is
-    * deterministic regardless of how the driver partitions the parquet.
-    * File order is pinned with explicit increasing mtimes (the file
-    * source's ordering key). */
-  /** `sentinelBatches` controls how many far-future watermark-driver
-    * batches trail the real chunks: 2 drains ONE stateful layer (lift the
-    * watermark, then fire the eviction scan); every additional CHAINED
-    * stateful operator adds one batch of flush latency — its input only
-    * arrives when the upstream layer evicts — so a query with k stateful
-    * layers needs k+1 sentinels to flush end to end (s_session_hourly: 3). */
-  def readEventsChunkedReplay(spark: SparkSession, dir: String,
-                              nChunks: Int,
-                              sentinelBatches: Int = 2): DataFrame = {
-    import spark.implicits._
-    val batch = graft.Tables.load(spark, dir, "events")
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id").cast("long").as("user_id"), col("ts"))
-    stageChunkedReplay(spark, batch, nChunks, maxUs =>
-      (1 to sentinelBatches).map(j => Seq((-1L,
-        new java.sql.Timestamp(maxUs / 1000L + j * 10 * 86400000L)))
-        .toDF("user_id", "ts")))._3
-  }
-
-  /** Value-carrying chunked replay (ts, event_type, value) for STATELESS
-    * foreachBatch consumers — no watermark state to flush, so no sentinel
-    * batches: exactly `nChunks` micro-batches in event-time order. */
-  def readEventsChunkedReplayValue(spark: SparkSession, dir: String,
-                                   nChunks: Int): DataFrame = {
-    val batch = graft.Tables.load(spark, dir, "events")
-      .filter(col("ts").isNotNull)
-      .select(col("ts"), col("event_type"), col("value"))
-    stageChunkedReplay(spark, batch, nChunks, _ => Seq.empty)._3
-  }
-
-  /** Full-column variant of [[readEventsChunkedReplay]] for multi-INPUT
-    * stateful queries: keeps (event_id, ts, user_id, event_type) so the
-    * replayed stream can be filtered into several sides of a join. Each
-    * sentinel batch therefore carries one far-future row PER event type a
-    * consumer might filter on ('click' and 'error') — a stream-stream
-    * join's watermark is the min over BOTH its watermark nodes, so a
-    * sentinel that advanced only one side would never move the joint
-    * watermark and outer-join null emissions would sit in state forever. */
-  def readEventsChunkedReplayFull(spark: SparkSession, dir: String,
-                                  nChunks: Int): DataFrame = {
-    val (path, schema) = stageEventsChunkedReplayFull(spark, dir, nChunks)
-    readStagedReplay(spark, path, schema)
-  }
-
-  /** Stage the full-column replay ONCE and return (path, schema): a
-    * multi-input query (e.g. both sides of a stream-stream join) opens
-    * two independent [[readStagedReplay]] sources over the same staged
-    * files instead of paying the chunk-staging write twice. */
-  def stageEventsChunkedReplayFull(spark: SparkSession, dir: String,
-      nChunks: Int): (String, org.apache.spark.sql.types.StructType) = {
-    import spark.implicits._
-    val batch = graft.Tables.load(spark, dir, "events")
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("event_id").cast("long").as("event_id"), col("ts"),
-        col("user_id").cast("long").as("user_id"), col("event_type"))
-    val staged = stageChunkedReplay(spark, batch, nChunks, maxUs =>
-      Seq(10, 20).zipWithIndex.map { case (days, j) =>
-        val far = new java.sql.Timestamp(maxUs / 1000L + days * 86400000L)
-        Seq((-1L - 2 * j, far, -1L, "click"),
-            (-2L - 2 * j, far, -1L, "error"))
-          .toDF("event_id", "ts", "user_id", "event_type")
-      })
-    (staged._1, staged._2)
-  }
-
-  /** One-file-per-trigger streaming read over a staged replay dir. */
-  def readStagedReplay(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(path)
-
-  /** Shared staging for the chunked replays: slice `batch` into `nChunks`
-    * event-time-ordered parquet files plus the given sentinel batches,
-    * pinned to increasing synthetic mtimes, and stream them back one file
-    * per trigger. `sentinels(maxUs)` returns one DataFrame per extra
-    * sentinel micro-batch, schema-identical to `batch`. Chunks follow
-    * event-time order, but rows WITHIN a chunk come in shuffle-fetch
-    * order, not scan order: consumers must not depend on it. The scratch
-    * dirs the chunks are cut in are removed before returning, so the
-    * staging root holds only `stream/`. */
-  private def stageChunkedReplay(spark: SparkSession, batch: DataFrame,
-      nChunks: Int, sentinels: Long => Seq[DataFrame]): (String,
-      org.apache.spark.sql.types.StructType, DataFrame) = {
-    val bounds = batch.agg(min(unix_micros(col("ts"))),
-      max(unix_micros(col("ts")))).first()
-    val (minUs, maxUs) = (bounds.getLong(0), bounds.getLong(1))
+    * All chunks are cut in ONE pass (guide §2.4): a partitioned write,
+    * hash-distributed by the chunk id, gives one file per chunk; an empty
+    * chunk or a task split into several files is restaged alone from a
+    * filter, and each `tail` frame is written on its own. File order is
+    * pinned with explicit increasing mtimes (the file source's ordering
+    * key), so it never depends on write latency. Chunks follow their ids,
+    * but rows WITHIN a chunk come in shuffle-fetch order, not scan order:
+    * consumers must not depend on it.
+    *
+    * The staged files live in `stream/` under a fresh `graft-replay-*` root
+    * in java.io.tmpdir (the scratch the chunks were cut in is removed
+    * before `body` runs), and the whole root is deleted when `body`
+    * returns or throws. `body` must therefore drain every stream it opens
+    * before it returns (into a memory sink or a table, as every caller
+    * does) and return nothing that still reads the files. */
+  def replay[T](spark: SparkSession, batch: DataFrame, chunk: Column,
+                nChunks: Int, tail: Seq[DataFrame] = Nil)(
+      body: (() => DataFrame) => T): T = {
     val root = java.nio.file.Files.createTempDirectory("graft-replay-")
-    val streamDir = root.resolve("stream"); java.nio.file.Files.createDirectory(streamDir)
-    // fixed synthetic mtimes: ordering must not depend on write latency
-    val mtime0 = 1600000000000L
-    def stage(df: DataFrame, i: Int): Unit = {
-      val stageDir = root.resolve(s"stage_$i").toString
-      df.coalesce(1).write.mode("overwrite").parquet(stageDir)
-      val part = new java.io.File(stageDir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .head
-      val dst = streamDir.resolve(f"chunk_$i%02d.parquet").toFile
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime0 + i * 60000L)
-    }
-    // equal event-time slices; an empty slice is just an empty micro-batch.
-    // All real chunks are cut in ONE pass (guide §2.4): a chunk-id column
-    // with exactly the same [lo, hi) boundaries, hash-distributed by it,
-    // written partitionBy(chunk) — one scan+shuffle+write job instead of
-    // nChunks full scans of the events table, and still one file per chunk.
-    val span = math.max(1L, maxUs - minUs + 1)
-    val cutoffs = (1 to nChunks).map(i => minUs + (span * i) / nChunks)
-    val us = unix_micros(col("ts"))
-    val chunkId = cutoffs.init.zipWithIndex.foldRight(
-      lit(nChunks - 1): org.apache.spark.sql.Column) {
-      case ((hi, i), rest) => when(us < hi, i).otherwise(rest)
-    }
-    val chunkDir = root.resolve("chunks").toString
-    batch.withColumn("__chunk", chunkId)
-      .repartition(col("__chunk"))
-      .write.partitionBy("__chunk").mode("overwrite").parquet(chunkDir)
-    (0 until nChunks).foreach { i =>
-      val files = Option(new java.io.File(s"$chunkDir/__chunk=$i").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      files match {
-        case Array(one) =>
-          val dst = streamDir.resolve(f"chunk_$i%02d.parquet").toFile
-          java.nio.file.Files.move(one.toPath, dst.toPath)
-          dst.setLastModified(mtime0 + i * 60000L)
-        case _ =>
-          // empty slice (partitionBy writes no dir) or a multi-file task
-          // split: restage that slice alone the slow way — rare, and the
-          // staged bytes are identical either way
-          val lo = minUs + (span * i) / nChunks
-          val hi = cutoffs(i)
-          stage(batch.filter(us >= lo && us < hi), i)
+    try {
+      val streamDir = root.resolve("stream")
+      java.nio.file.Files.createDirectory(streamDir)
+      def parts(dir: String): Array[java.io.File] =
+        Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      def place(part: java.io.File, i: Int): Unit = {
+        val dst = streamDir.resolve(f"chunk_$i%02d.parquet").toFile
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        dst.setLastModified(1600000000000L + i * 60000L)
       }
+      def stage(df: DataFrame, i: Int): Unit = {
+        val dir = root.resolve(s"stage_$i").toString
+        df.coalesce(1).write.mode("overwrite").parquet(dir)
+        place(parts(dir).head, i)
+      }
+      val id = chunk.cast("int")
+      val chunkDir = root.resolve("chunks").toString
+      batch.withColumn("__chunk", id)
+        .repartition(col("__chunk"))
+        .write.partitionBy("__chunk").mode("overwrite").parquet(chunkDir)
+      (0 until nChunks).foreach { i =>
+        parts(s"$chunkDir/__chunk=$i") match {
+          case Array(one) => place(one, i)
+          case _ => stage(batch.filter(id === i), i)
+        }
+      }
+      tail.zipWithIndex.foreach { case (df, j) => stage(df, nChunks + j) }
+      // every streamed file is in stream/; the rest is the writes' leftovers
+      root.toFile.listFiles().filter(_.getName != "stream")
+        .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      body(() => spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  /** Equal event-time slices of `batch` for [[replay]]: returns the chunk
+    * id (slice `i` holds the `i`-th of `nChunks` equal parts of the `ts`
+    * range) and the corpus maximum in µs, past which a caller places its
+    * far-future sentinel rows. One bounds aggregate; `ts` must be non-null.
+    *
+    * This is the harness that lets TIMEOUT-driven state machines and outer
+    * stream-stream joins be oracle-gated: timeouts and outer null rows
+    * only fire across batch boundaries, and sentinel rows in the trailing
+    * batches advance the event-time watermark past every real deadline, so
+    * by the final batch all keyed state has been flushed and the
+    * append-mode drain equals the batch formulation. Because the split is
+    * by event time, no row is ever late (batch k's minimum exceeds batch
+    * k-1's maximum = the watermark), so a 0-second watermark delay loses
+    * nothing and the replay is deterministic however the parquet is
+    * partitioned. */
+  def timeSlices(batch: DataFrame, nChunks: Int): (Column, Long) = {
+    val us = unix_micros(col("ts"))
+    val bounds = batch.agg(min(us), max(us)).first()
+    val (minUs, maxUs) = (bounds.getLong(0), bounds.getLong(1))
+    val span = math.max(1L, maxUs - minUs + 1)
+    val chunk = (0 until nChunks - 1).foldRight(lit(nChunks - 1)) {
+      (i, rest) => when(us < minUs + span * (i + 1) / nChunks, i).otherwise(rest)
     }
-    // two sentinels, each its own batch: the FIRST lifts the watermark past
-    // every real deadline at its batch's end; the SECOND's (data) batch then
-    // fires the expired timers — no reliance on no-data micro-batches.
-    sentinels(maxUs).zipWithIndex.foreach { case (df, j) =>
-      stage(df, nChunks + j)
-    }
-    // every streamed part file is in stream/ now; chunks/ and stage_*/
-    // hold only the writes' leftovers
-    root.toFile.listFiles().filter(_.getName != "stream")
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    (streamDir.toString, batch.schema,
-      readStagedReplay(spark, streamDir.toString, batch.schema))
+    (chunk, maxUs)
   }
 
   /** Drain a (bounded) streaming DataFrame through a memory sink and return
@@ -339,10 +263,8 @@ object EventsStream {
     // drains so two concurrent save/set/restore sequences can't interleave
     // and strand the session at the scoped-down value
     drainLock.synchronized {
-      val conf = spark.conf
-      val prev = conf.get("spark.sql.shuffle.partitions")
-      conf.set("spark.sql.shuffle.partitions", statePartitions)
-      try {
+      graft.Engine.withConf(spark,
+          "spark.sql.shuffle.partitions" -> statePartitions.toString) {
         val q = df.writeStream
           .format("memory")
           .queryName(name)
@@ -350,7 +272,7 @@ object EventsStream {
           .start()
         try q.processAllAvailable()
         finally q.stop()
-      } finally conf.set("spark.sql.shuffle.partitions", prev)
+      }
     }
     spark.table(name)
   }

@@ -125,7 +125,7 @@ object StatefulOps {
     * Timeout behavior is a multi-batch property (nothing times out inside
     * one batch), so the oracle gate replays the input as MULTIPLE
     * micro-batches with sentinel watermark drivers
-    * ([[EventsStream.readEventsChunkedReplay]] → `s_sessionize_timeout`);
+    * ([[EventsStream.replay]] → `s_sessionize_timeout`);
     * watermark-advance eviction is additionally unit-tested in
     * `StreamingSpec`. */
   def streamingSessionize(spark: SparkSession, events: DataFrame,

@@ -52,4 +52,27 @@ class EngineSpec extends AnyFunSuite {
     assert(TestSpark.spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
+
+  test("withConf puts a set key back and unsets an unset one when body throws") {
+    val spark = TestSpark.spark
+    // an unset key that has a default: it must come back unset, not pinned
+    // to the default it read while unset
+    val (setKey, unsetKey) =
+      ("spark.graft.spec.withConf", "spark.sql.sources.partitionOverwriteMode")
+    assert(!spark.conf.getAll.contains(unsetKey))
+    spark.conf.set(setKey, "old")
+    try {
+      val e = intercept[IllegalStateException] {
+        Engine.withConf(spark, setKey -> "new", unsetKey -> "dynamic") {
+          assert(spark.conf.get(setKey) == "new")
+          assert(spark.conf.get(unsetKey) == "dynamic")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(spark.conf.get(setKey) == "old")
+      assert(!spark.conf.getAll.contains(unsetKey))
+      assert(spark.conf.get(unsetKey) == "STATIC")
+    } finally spark.conf.unset(setKey)
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,8 +15,7 @@ class TablesSpec extends AnyFunSuite {
     df.queryExecution.logical.collectFirst { case r: Repartition => r }.nonEmpty
 
   test("a rewrite at the same path serves the new schema and repartition decision") {
-    val dir = Files.createTempDirectory("graft-tables").toFile
-    try {
+    TestSpark.withTempDir("graft-tables") { dir =>
       val path = s"$dir/orders.parquet"
       def bytes = org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(path))
       spark.range(0, 100).select(col("id").as("o_orderkey"))
@@ -37,12 +34,11 @@ class TablesSpec extends AnyFunSuite {
       assert(big.columns.toSeq == Seq("o_orderkey", "o_comment"))
       assert(repartitioned(big), "the rewritten table must take the repartition")
       assert(big.count() == 20000L)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("every read is a fresh relation: a warm self-join keeps distinct attributes") {
-    val dir = Files.createTempDirectory("graft-tables").toFile
-    try {
+    TestSpark.withTempDir("graft-tables") { dir =>
       spark.range(0, 25).select(col("id").as("n_nationkey"))
         .write.parquet(s"$dir/nation.parquet")
       val a = Tables.load(spark, dir.toString, "nation")
@@ -51,6 +47,6 @@ class TablesSpec extends AnyFunSuite {
         df.queryExecution.analyzed.output.map(_.exprId).toSet
       assert(ids(a).intersect(ids(b)).isEmpty)
       assert(a.join(b, a("n_nationkey") === b("n_nationkey")).count() == 25L)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 }

@@ -2,13 +2,25 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites, with an isolated temp warehouse
-  * so managed-table tests (rpt catalog) never touch real data. */
+  * so managed-table tests (rpt catalog) never touch real data; the
+  * warehouse is deleted when the test JVM exits. */
 object TestSpark {
-  lazy val spark: SparkSession = Engine.session(4,
-    "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft-warehouse").toString)
+  lazy val spark: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(warehouse))
+    Engine.session(4, "spark.sql.warehouse.dir" -> warehouse.toString)
+  }
+
+  /** A fresh directory under java.io.tmpdir named `prefix`*, deleted with
+    * everything in it once `f` returns or throws. */
+  def withTempDir[T](prefix: String)(f: java.io.File => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try f(dir) finally FileUtils.deleteDirectory(dir)
+  }
 
   def fixture(name: String): String =
     s"${graft.pipeline.Fixtures.dir}/$name"

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,18 +51,27 @@ class IndexCacheSpec extends AnyFunSuite {
       when(col("vec_id") === 3L,
         concat(array(lit(9.0f)), slice(col("embedding"), 2, 3)))
         .otherwise(col("embedding")))
-    val a1 = IvfIndex.loadOrBuildSampled(spark, c1, tag, "vec_id", "embedding", 4)
-    // second corpus: SAME tag, SAME row count, vec 3's first component
-    // differs → fingerprint differs → a fresh index must be built, and it
-    // must match a direct (uncached) assignment of the new corpus
-    val c2 = corpus(false)
-    val a2 = IvfIndex.loadOrBuildSampled(spark, c2, tag, "vec_id", "embedding", 4)
-    val direct = IvfIndex.assignSampled(c2, "vec_id", "embedding", 4)
-    assert(a2.except(direct).count() == 0 && direct.except(a2).count() == 0,
-      "index served for the mutated corpus must reflect the mutation")
-    // and the first index is still intact at its own key (no clobber)
-    val a1again = IvfIndex.loadOrBuildSampled(spark, c1, tag, "vec_id", "embedding", 4)
-    assert(a1again.except(a1).count() == 0 && a1.except(a1again).count() == 0)
+    val served = scala.collection.mutable.Buffer.empty[DataFrame]
+    def index(c: DataFrame): DataFrame = {
+      val a = IvfIndex.loadOrBuildSampled(spark, c, tag, "vec_id", "embedding", 4)
+      served += a
+      a
+    }
+    try {
+      val a1 = index(c1)
+      // second corpus: SAME tag, SAME row count, vec 3's first component
+      // differs → fingerprint differs → a fresh index must be built, and it
+      // must match a direct (uncached) assignment of the new corpus
+      val c2 = corpus(false)
+      val a2 = index(c2)
+      val direct = IvfIndex.assignSampled(c2, "vec_id", "embedding", 4)
+      assert(a2.except(direct).count() == 0 && direct.except(a2).count() == 0,
+        "index served for the mutated corpus must reflect the mutation")
+      // and the first index is still intact at its own key (no clobber)
+      val a1again = index(c1)
+      assert(a1again.except(a1).count() == 0 && a1.except(a1again).count() == 0)
+    } finally served.foreach(a => org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(new java.net.URI(a.inputFiles.head)).getParentFile))
   }
 
   test("a warm loadOrBuildSampled call launches no job") {
@@ -84,8 +94,7 @@ class IndexCacheSpec extends AnyFunSuite {
     // rewrite keeps the file's path and row count and changes component 2
     // of one vector, so only the file stamp (length, mtime) can tell the
     // plan-keyed fingerprint memo that the content moved
-    val root = java.nio.file.Files.createTempDirectory("graft-idxsrc").toFile
-    try {
+    TestSpark.withTempDir("graft-idxsrc") { root =>
       val file = new java.io.File(root, "emb/part-0.parquet")
       def publish(mutated: Boolean): Unit = {
         val staged = new java.io.File(root, s"staged-$mutated")
@@ -109,60 +118,62 @@ class IndexCacheSpec extends AnyFunSuite {
       assert(k2.endsWith(s"-$n-$fp"), k2)
       Seq(k1, k2).foreach(k =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(k)))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
   }
 
   test("publishOnce: marker short-circuits, rename loser is cleaned up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pubonce").toFile
-    val target = new java.io.File(dir, "artifact")
-    var builds = 0
-    IvfIndex.publishOnce(target) { tmp =>
-      builds += 1
-      val d = new java.io.File(tmp); d.mkdirs()
+    TestSpark.withTempDir("graft-pubonce") { dir =>
+      val target = new java.io.File(dir, "artifact")
+      var builds = 0
+      IvfIndex.publishOnce(target) { tmp =>
+        builds += 1
+        val d = new java.io.File(tmp); d.mkdirs()
+        java.nio.file.Files.writeString(
+          new java.io.File(d, "_SUCCESS").toPath, "")
+      }
+      assert(builds == 1 && new java.io.File(target, "_SUCCESS").exists())
+      // second call: marker present, build must not run
+      IvfIndex.publishOnce(target) { _ => builds += 1 }
+      assert(builds == 1)
+      // simulate losing the publish race: target already exists when the
+      // rename fires → the builder's tmp dir must be deleted, target kept
+      val target2 = new java.io.File(dir, "artifact2")
+      target2.mkdirs()
       java.nio.file.Files.writeString(
-        new java.io.File(d, "_SUCCESS").toPath, "")
+        new java.io.File(target2, "winner").toPath, "w")
+      IvfIndex.publishOnce(target2) { tmp =>
+        val d = new java.io.File(tmp); d.mkdirs()
+        java.nio.file.Files.writeString(new java.io.File(d, "loser").toPath, "l")
+      }
+      assert(new java.io.File(target2, "winner").exists())
+      assert(dir.listFiles().count(_.getName.startsWith("artifact2.tmp-")) == 0,
+        "losing builder's tmp dir must be removed")
     }
-    assert(builds == 1 && new java.io.File(target, "_SUCCESS").exists())
-    // second call: marker present, build must not run
-    IvfIndex.publishOnce(target) { _ => builds += 1 }
-    assert(builds == 1)
-    // simulate losing the publish race: target already exists when the
-    // rename fires → the builder's tmp dir must be deleted, target kept
-    val target2 = new java.io.File(dir, "artifact2")
-    target2.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(target2, "winner").toPath, "w")
-    IvfIndex.publishOnce(target2) { tmp =>
-      val d = new java.io.File(tmp); d.mkdirs()
-      java.nio.file.Files.writeString(new java.io.File(d, "loser").toPath, "l")
-    }
-    assert(new java.io.File(target2, "winner").exists())
-    assert(dir.listFiles().count(_.getName.startsWith("artifact2.tmp-")) == 0,
-      "losing builder's tmp dir must be removed")
   }
 
   test("publishOnce: a build that throws leaves no tmp sibling and no marker") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pubfail").toFile
-    val target = new java.io.File(dir, "artifact")
-    val e = intercept[IllegalStateException] {
-      IvfIndex.publishOnce(target) { tmp =>
-        val d = new java.io.File(tmp); d.mkdirs()
-        java.nio.file.Files.writeString(new java.io.File(d, "part").toPath, "p")
-        throw new IllegalStateException("build failed")
+    TestSpark.withTempDir("graft-pubfail") { dir =>
+      val target = new java.io.File(dir, "artifact")
+      val e = intercept[IllegalStateException] {
+        IvfIndex.publishOnce(target) { tmp =>
+          val d = new java.io.File(tmp); d.mkdirs()
+          java.nio.file.Files.writeString(new java.io.File(d, "part").toPath, "p")
+          throw new IllegalStateException("build failed")
+        }
       }
+      assert(e.getMessage == "build failed", "the build's exception must reach the caller")
+      assert(dir.listFiles().count(_.getName.startsWith("artifact.tmp-")) == 0,
+        "a failed build's tmp dir must be removed")
+      assert(!new java.io.File(target, "_SUCCESS").exists())
+      // the next call finds no marker and builds
+      var builds = 0
+      IvfIndex.publishOnce(target) { tmp =>
+        builds += 1
+        val d = new java.io.File(tmp); d.mkdirs()
+        java.nio.file.Files.writeString(new java.io.File(d, "_SUCCESS").toPath, "")
+      }
+      assert(builds == 1 && new java.io.File(target, "_SUCCESS").exists())
+      assert(dir.listFiles().map(_.getName).sorted.sameElements(Array("artifact")))
     }
-    assert(e.getMessage == "build failed", "the build's exception must reach the caller")
-    assert(dir.listFiles().count(_.getName.startsWith("artifact.tmp-")) == 0,
-      "a failed build's tmp dir must be removed")
-    assert(!new java.io.File(target, "_SUCCESS").exists())
-    // the next call finds no marker and builds
-    var builds = 0
-    IvfIndex.publishOnce(target) { tmp =>
-      builds += 1
-      val d = new java.io.File(tmp); d.mkdirs()
-      java.nio.file.Files.writeString(new java.io.File(d, "_SUCCESS").toPath, "")
-    }
-    assert(builds == 1 && new java.io.File(target, "_SUCCESS").exists())
-    assert(dir.listFiles().map(_.getName).sorted.sameElements(Array("artifact")))
   }
 }

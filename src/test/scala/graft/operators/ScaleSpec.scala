@@ -56,39 +56,41 @@ class ScaleSpec extends AnyFunSuite {
     val pts = spark.range(n).select(
       (col("id") * 2654435761L % 1024).as("x"),
       ((col("id") + 7) * 40503L % 1024).as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
-      df.coalesce(1).write.option("parquet.block.size", 64 * 1024)
-        .mode("overwrite").parquet(path)
-    write(pts, s"$dir/plain")
-    write(pts.sortWithinPartitions(ZOrder.zValue(col("x"), col("y"))),
-      s"$dir/zorder")
-    // AQE off for the probe: with AQE the df's executedPlan is an adaptive
-    // wrapper whose scan node (and metrics) only materialize inside the
-    // final plan of whichever action ran — a static plan makes the scan's
-    // numOutputRows directly attributable to the collect below
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    def scannedRows(path: String): (Long, Long) = {
-      val q = spark.read.parquet(path)
-        .filter(col("x") < 64 && col("y") < 64)
-      val matched = q.collect().length.toLong
-      val scan = q.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f }.head
-      (matched, scan.metrics("numOutputRows").value)
+    TestSpark.withTempDir("graft-zorder") { d =>
+      val dir = d.toString
+      def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+        df.coalesce(1).write.option("parquet.block.size", 64 * 1024)
+          .mode("overwrite").parquet(path)
+      write(pts, s"$dir/plain")
+      write(pts.sortWithinPartitions(ZOrder.zValue(col("x"), col("y"))),
+        s"$dir/zorder")
+      // AQE off for the probe: with AQE the df's executedPlan is an adaptive
+      // wrapper whose scan node (and metrics) only materialize inside the
+      // final plan of whichever action ran — a static plan makes the scan's
+      // numOutputRows directly attributable to the collect below
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      def scannedRows(path: String): (Long, Long) = {
+        val q = spark.read.parquet(path)
+          .filter(col("x") < 64 && col("y") < 64)
+        val matched = q.collect().length.toLong
+        val scan = q.queryExecution.executedPlan.collect {
+          case f: FileSourceScanExec => f }.head
+        (matched, scan.metrics("numOutputRows").value)
+      }
+      try {
+        val (matchPlain, scanPlain) = scannedRows(s"$dir/plain")
+        val (matchZ, scanZ) = scannedRows(s"$dir/zorder")
+        assert(matchPlain == matchZ, "layout must not change results")
+        // unsorted: every row group spans the full value range -> min/max
+        // prunes nothing and the scan emits ~all rows; z-sorted: the 1/256
+        // box touches few row groups. Demand at least 4x fewer scanned rows.
+        assert(scanPlain > n / 2,
+          s"unsorted scan should read ~everything, read $scanPlain")
+        assert(scanZ * 4 < scanPlain,
+          s"z-order should prune row groups: scanned $scanZ vs $scanPlain")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
-    try {
-      val (matchPlain, scanPlain) = scannedRows(s"$dir/plain")
-      val (matchZ, scanZ) = scannedRows(s"$dir/zorder")
-      assert(matchPlain == matchZ, "layout must not change results")
-      // unsorted: every row group spans the full value range -> min/max
-      // prunes nothing and the scan emits ~all rows; z-sorted: the 1/256
-      // box touches few row groups. Demand at least 4x fewer scanned rows.
-      assert(scanPlain > n / 2,
-        s"unsorted scan should read ~everything, read $scanPlain")
-      assert(scanZ * 4 < scanPlain,
-        s"z-order should prune row groups: scanned $scanZ vs $scanPlain")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
   test("bucketed tables sort-merge join without an exchange") {
@@ -420,6 +422,18 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("s_knn_ingest stages its four micro-batches in one partitioned write") {
+    // EventsStream.replay cuts every chunk in one write partitioned by the
+    // chunk id: 5 jobs warm, measured; a coalesced write per chunk (the
+    // old staging) cost 10. The micro-batches run in the stream's own job
+    // group, so only the driver thread's staging and probe set-up count.
+    val q = graft.SparkEntry.queries("s_knn_ingest")
+    q(spark, dir)
+    val (df, jobs) = jobsOf(q(spark, dir))
+    assert(jobs <= 5, s"$jobs jobs warm")
+    assert(df.count() == 10)
+  }
+
   test("reporting e2e load path scales linearly in staged pages") {
     // the round-10 verdict's ask #5: p_reporting_e2e only ever ran at the
     // ~10-row bundled fixture; this gate synthesizes reference-shaped
@@ -430,10 +444,7 @@ class ScaleSpec extends AnyFunSuite {
     // numbers land in DESIGN.md (round-11 table).
     import java.nio.file.{Files, Paths}
     import graft.pipeline.{Catalog, Loader, ReportingPipeline, Schemas, Staging}
-    val fixtures = scala.collection.mutable.Buffer.empty[java.io.File]
-    def genFixture(nPages: Int, rowsPerPage: Int): String = {
-      val tmp = Files.createTempDirectory("graft-repscale").toString
-      fixtures += new java.io.File(tmp)
+    def genFixture(tmp: String, nPages: Int, rowsPerPage: Int): Unit = {
       for (p <- 0 until nPages) {
         val sb = new StringBuilder("[\n")
         for (i <- 0 until rowsPerPage) {
@@ -451,51 +462,50 @@ class ScaleSpec extends AnyFunSuite {
         sb.append("\n]\n")
         Files.writeString(Paths.get(tmp, f"dagRuns$p%04d.json"), sb.toString)
       }
-      tmp
     }
-    def measure(nPages: Int, rowsPerPage: Int): (Double, Double, Double, Long) = {
-      val fixture = genFixture(nPages, rowsPerPage)
-      Catalog.drop(spark)
-      val t0 = System.nanoTime()
-      ReportingPipeline.run(spark, fixture) // initial load
-      val t1 = System.nanoTime()
-      ReportingPipeline.run(spark, fixture) // replay: watermark no-op
-      val t2 = System.nanoTime()
-      // 100%-overlap batch straight at the anti-join (bypasses the
-      // watermark): every staged PK already exists, 0 rows may append
-      val files = (0 until nPages).map(p => f"$fixture/dagRuns$p%04d.json")
-      val staged = Staging.readStaged(spark, "dag_run", files,
-        keepSourceFile = true)
-      val table = Catalog.tableName("dag_run")
-      Loader.dedupAppend(spark, staged, table, Schemas.pkOf("dag_run"),
-        preference = Seq(col(Staging.srcFileCol)))
-      val t3 = System.nanoTime()
-      val n = spark.table(table).count()
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, n)
-    }
-    try {
-      measure(nPages = 1, rowsPerPage = 100) // warmup: codegen + catalog DDL
-      val (loadS, replayS, dedupS, nS) = measure(nPages = 4, rowsPerPage = 2500)
-      val (loadL, replayL, dedupL, nL) = measure(nPages = 40, rowsPerPage = 2500)
-      println(f"[scale] reporting e2e: small(n=$nS) load=$loadS%.2f s " +
-        f"replay=$replayS%.2f s dedup100pct=$dedupS%.2f s | " +
-        f"large(n=$nL) load=$loadL%.2f s replay=$replayL%.2f s " +
-        f"dedup100pct=$dedupL%.2f s")
-      assert(nS == 10000L && nL == 100000L,
-        s"load lost rows: small=$nS large=$nL")
-      // linear-ish gates: 6× over a 1 s noise floor (measured ratios are
-      // 1.2-2.0× — fixed per-run overhead dominates at these sizes — so 6×
-      // is ≥3× headroom for CI noise, while a QUADRATIC anti-join or
-      // watermark would cost ~100× on the data-dependent part of the large
-      // run and blow well past max(small,1s)×6; round-12 advice tightened
-      // this from the original 30×, which was loose enough to pass a
-      // quadratic regression at these fixture sizes)
-      assert(loadL <= math.max(loadS, 1.0) * 6.0,
-        f"initial load superlinear: $loadS%.2f -> $loadL%.2f s on 10x pages")
-      assert(dedupL <= math.max(dedupS, 1.0) * 6.0,
-        f"overlap dedup superlinear: $dedupS%.2f -> $dedupL%.2f s on 10x pages")
-      assert(replayL <= math.max(replayS, 1.0) * 6.0,
-        f"replay superlinear: $replayS%.2f -> $replayL%.2f s on 10x pages")
-    } finally fixtures.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    def measure(nPages: Int, rowsPerPage: Int): (Double, Double, Double, Long) =
+      TestSpark.withTempDir("graft-repscale") { d =>
+        val fixture = d.toString
+        genFixture(fixture, nPages, rowsPerPage)
+        Catalog.drop(spark)
+        val t0 = System.nanoTime()
+        ReportingPipeline.run(spark, fixture) // initial load
+        val t1 = System.nanoTime()
+        ReportingPipeline.run(spark, fixture) // replay: watermark no-op
+        val t2 = System.nanoTime()
+        // 100%-overlap batch straight at the anti-join (bypasses the
+        // watermark): every staged PK already exists, 0 rows may append
+        val files = (0 until nPages).map(p => f"$fixture/dagRuns$p%04d.json")
+        val staged = Staging.readStaged(spark, "dag_run", files,
+          keepSourceFile = true)
+        val table = Catalog.tableName("dag_run")
+        Loader.dedupAppend(spark, staged, table, Schemas.pkOf("dag_run"),
+          preference = Seq(col(Staging.srcFileCol)))
+        val t3 = System.nanoTime()
+        val n = spark.table(table).count()
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, n)
+      }
+    measure(nPages = 1, rowsPerPage = 100) // warmup: codegen + catalog DDL
+    val (loadS, replayS, dedupS, nS) = measure(nPages = 4, rowsPerPage = 2500)
+    val (loadL, replayL, dedupL, nL) = measure(nPages = 40, rowsPerPage = 2500)
+    println(f"[scale] reporting e2e: small(n=$nS) load=$loadS%.2f s " +
+      f"replay=$replayS%.2f s dedup100pct=$dedupS%.2f s | " +
+      f"large(n=$nL) load=$loadL%.2f s replay=$replayL%.2f s " +
+      f"dedup100pct=$dedupL%.2f s")
+    assert(nS == 10000L && nL == 100000L,
+      s"load lost rows: small=$nS large=$nL")
+    // linear-ish gates: 6× over a 1 s noise floor (measured ratios are
+    // 1.2-2.0× — fixed per-run overhead dominates at these sizes — so 6×
+    // is ≥3× headroom for CI noise, while a QUADRATIC anti-join or
+    // watermark would cost ~100× on the data-dependent part of the large
+    // run and blow well past max(small,1s)×6; round-12 advice tightened
+    // this from the original 30×, which was loose enough to pass a
+    // quadratic regression at these fixture sizes)
+    assert(loadL <= math.max(loadS, 1.0) * 6.0,
+      f"initial load superlinear: $loadS%.2f -> $loadL%.2f s on 10x pages")
+    assert(dedupL <= math.max(dedupS, 1.0) * 6.0,
+      f"overlap dedup superlinear: $dedupS%.2f -> $dedupL%.2f s on 10x pages")
+    assert(replayL <= math.max(replayS, 1.0) * 6.0,
+      f"replay superlinear: $replayS%.2f -> $replayL%.2f s on 10x pages")
   }
 }

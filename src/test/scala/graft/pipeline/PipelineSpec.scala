@@ -39,39 +39,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = managedLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(managedLoc), "managed location must be deleted")
     // external: DROP TABLE preserves the data, and so must dropManaged
-    val ext = Files.createTempDirectory("graft-ext").toString
-    spark.range(3).write.mode("overwrite").parquet(ext)
-    spark.sql(s"CREATE TABLE rpt.ext_probe (id BIGINT) USING parquet LOCATION '$ext'")
-    Catalog.dropManaged(spark, "rpt.ext_probe")
-    assert(!spark.catalog.tableExists("rpt.ext_probe"))
-    assert(spark.read.parquet(ext).count() == 3,
-      "external data must survive dropManaged")
+    TestSpark.withTempDir("graft-ext") { d =>
+      val ext = d.toString
+      spark.range(3).write.mode("overwrite").parquet(ext)
+      spark.sql(s"CREATE TABLE rpt.ext_probe (id BIGINT) USING parquet LOCATION '$ext'")
+      Catalog.dropManaged(spark, "rpt.ext_probe")
+      assert(!spark.catalog.tableExists("rpt.ext_probe"))
+      assert(spark.read.parquet(ext).count() == 3,
+        "external data must survive dropManaged")
+    }
   }
 
   test("tolerant staging read honors max_bad_records (gcs_to_postgres.py:103)") {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft-badrec")
-    val good = Paths.get(Fixtures.dir, "dagRuns1.json")
-    Files.copy(good, tmp.resolve("page1.json"))
-    Files.writeString(tmp.resolve("page2.json"), "{not json at all")
-    val paths = Seq(s"$tmp/page1.json", s"$tmp/page2.json")
-    // one malformed file = one bad record in array form; within budget it
-    // is dropped, past the budget the load fails
-    val ok = Staging.readStagedTolerant(spark, "dag_run", paths, maxBadRecords = 1)
-    assert(ok.count() ==
-      Staging.readStaged(spark, "dag_run", Seq(good.toString)).count())
-    assert(ok.columns.toSeq == Schemas.byEntity("dag_run").fieldNames.toSeq)
-    val e = intercept[IllegalStateException] {
-      Staging.readStagedTolerant(spark, "dag_run", paths, maxBadRecords = 0).count()
+    TestSpark.withTempDir("graft-badrec") { d =>
+      val tmp = d.toPath
+      val good = Paths.get(Fixtures.dir, "dagRuns1.json")
+      Files.copy(good, tmp.resolve("page1.json"))
+      Files.writeString(tmp.resolve("page2.json"), "{not json at all")
+      val paths = Seq(s"$tmp/page1.json", s"$tmp/page2.json")
+      // one malformed file = one bad record in array form; within budget it
+      // is dropped, past the budget the load fails
+      val ok = Staging.readStagedTolerant(spark, "dag_run", paths, maxBadRecords = 1)
+      assert(ok.count() ==
+        Staging.readStaged(spark, "dag_run", Seq(good.toString)).count())
+      assert(ok.columns.toSeq == Schemas.byEntity("dag_run").fieldNames.toSeq)
+      val e = intercept[IllegalStateException] {
+        Staging.readStagedTolerant(spark, "dag_run", paths, maxBadRecords = 0).count()
+      }
+      assert(e.getMessage.contains("max_bad_records"))
+      // keepSourceFile must carry real file URIs (a cached scan would blank
+      // input_file_name) so the loader's first-file-wins preference works
+      val withSrc = Staging.readStagedTolerant(spark, "dag_run", paths,
+        maxBadRecords = 1, keepSourceFile = true)
+      val srcs = withSrc.select(Staging.srcFileCol).distinct()
+        .collect().map(_.getString(0))
+      assert(srcs.nonEmpty && srcs.forall(_.contains("page1.json")))
     }
-    assert(e.getMessage.contains("max_bad_records"))
-    // keepSourceFile must carry real file URIs (a cached scan would blank
-    // input_file_name) so the loader's first-file-wins preference works
-    val withSrc = Staging.readStagedTolerant(spark, "dag_run", paths,
-      maxBadRecords = 1, keepSourceFile = true)
-    val srcs = withSrc.select(Staging.srcFileCol).distinct()
-      .collect().map(_.getString(0))
-    assert(srcs.nonEmpty && srcs.forall(_.contains("page1.json")))
   }
 
   test("staged JSON-array read applies schema, keeps nulls, parses ISO-8601 offsets") {
@@ -143,13 +147,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("CSV interop roundtrip preserves NULLs as empty fields (O14 contract)") {
     val staged = Staging.readStaged(spark, "dag_run",
       Seq(TestSpark.fixture("dagRuns1.json"), TestSpark.fixture("dagRuns2.json")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
-    val path = Staging.writeStagedCsv(staged, dir, "dag_run", "20220301T000000")
-    val back = Staging.readStagedCsv(spark, "dag_run", path)
-    assert(back.count() == staged.count())
-    assert(back.filter(col("end_date").isNull).count() ==
-      staged.filter(col("end_date").isNull).count())
-    assert(back.except(staged).count() == 0 && staged.except(back).count() == 0)
+    TestSpark.withTempDir("graft-csv") { d =>
+      val dir = d.toString
+      val path = Staging.writeStagedCsv(staged, dir, "dag_run", "20220301T000000")
+      val back = Staging.readStagedCsv(spark, "dag_run", path)
+      assert(back.count() == staged.count())
+      assert(back.filter(col("end_date").isNull).count() ==
+        staged.filter(col("end_date").isNull).count())
+      assert(back.except(staged).count() == 0 && staged.except(back).count() == 0)
+    }
   }
 
   test("executor_config is coerced to binary at the sink (rpt.sql:57)") {

@@ -76,14 +76,16 @@ class PropertySpec extends AnyFunSuite {
   test("staging null roundtrip: json write/read preserves nulls and values") {
     check("roundtrip")(Prop.forAll(Gen.listOfN(15, genRun)) { rows =>
       val b = df(rows)
-      val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
-      Staging.writeStaged(b, dir, "dag_run", "20220301T000000")
-      val back = Staging.readStaged(spark, "dag_run",
-        Seq(Staging.stagingPath(dir, "dag_run", "20220301T000000")), arrayForm = false)
-      back.count() == b.count() &&
-        back.filter(col("start_date").isNull).count() ==
-          b.filter(col("start_date").isNull).count() &&
-        back.except(b).count() == 0 && b.except(back).count() == 0
+      TestSpark.withTempDir("graft-prop") { d =>
+        val dir = d.toString
+        Staging.writeStaged(b, dir, "dag_run", "20220301T000000")
+        val back = Staging.readStaged(spark, "dag_run",
+          Seq(Staging.stagingPath(dir, "dag_run", "20220301T000000")), arrayForm = false)
+        back.count() == b.count() &&
+          back.filter(col("start_date").isNull).count() ==
+            b.filter(col("start_date").isNull).count() &&
+          back.except(b).count() == 0 && b.except(back).count() == 0
+      }
     })
   }
 }

@@ -283,23 +283,27 @@ class RestExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dag entity routes through the fan-out in extractStageLoad") {
     Catalog.drop(spark); Catalog.ensure(spark)
     val api = RestExtract.Api(base, batchSize = 10)
-    val stagingBase = java.nio.file.Files.createTempDirectory("graft-dags").toString
-    RestExtract.extractStageLoad(spark, api, "dag", stagingBase, "20220301T000000")
-    assert(spark.table("rpt.dag").count() == 25)
-    // full-refresh mode + PK dedup on dag_id → second run stays at 25
-    RestExtract.extractStageLoad(spark, api, "dag", stagingBase, "20220301T010000")
-    assert(spark.table("rpt.dag").count() == 25)
+    TestSpark.withTempDir("graft-dags") { d =>
+      val stagingBase = d.toString
+      RestExtract.extractStageLoad(spark, api, "dag", stagingBase, "20220301T000000")
+      assert(spark.table("rpt.dag").count() == 25)
+      // full-refresh mode + PK dedup on dag_id → second run stays at 25
+      RestExtract.extractStageLoad(spark, api, "dag", stagingBase, "20220301T010000")
+      assert(spark.table("rpt.dag").count() == 25)
+    }
   }
 
   test("live extract→stage→load is incremental and idempotent") {
     Catalog.drop(spark); Catalog.ensure(spark)
     val api = RestExtract.Api(base, batchSize = 7)
-    val stagingBase = java.nio.file.Files.createTempDirectory("graft-live").toString
-    RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T000000")
-    assert(spark.table("rpt.dag_run").count() == 25)
-    // second run: watermark = max(start_date) → server returns nothing new
-    RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T010000")
-    assert(spark.table("rpt.dag_run").count() == 25)
+    TestSpark.withTempDir("graft-live") { d =>
+      val stagingBase = d.toString
+      RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T000000")
+      assert(spark.table("rpt.dag_run").count() == 25)
+      // second run: watermark = max(start_date) → server returns nothing new
+      RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T010000")
+      assert(spark.table("rpt.dag_run").count() == 25)
+    }
   }
 
   test("batch-list POST: offset advances in the body, watermark rides every page") {
@@ -375,13 +379,15 @@ class RestExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("batch-list POST mode runs the full extract→stage→load incrementally") {
     Catalog.drop(spark); Catalog.ensure(spark)
     val api = RestExtract.Api(postBase, batchSize = 10, postList = true)
-    val stagingBase = java.nio.file.Files.createTempDirectory("graft-post").toString
-    RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T000000")
-    assert(spark.table("rpt.dag_run").count() == 25)
-    // second run: watermark = max(start_date); server-side >= returns only
-    // the boundary row, residual strict > drops it → still 25
-    RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T010000")
-    assert(spark.table("rpt.dag_run").count() == 25)
+    TestSpark.withTempDir("graft-post") { d =>
+      val stagingBase = d.toString
+      RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T000000")
+      assert(spark.table("rpt.dag_run").count() == 25)
+      // second run: watermark = max(start_date); server-side >= returns only
+      // the boundary row, residual strict > drops it → still 25
+      RestExtract.extractStageLoad(spark, api, "dag_run", stagingBase, "20220301T010000")
+      assert(spark.table("rpt.dag_run").count() == 25)
+    }
   }
 
   test("transient 503s are retried with backoff; extraction still succeeds") {

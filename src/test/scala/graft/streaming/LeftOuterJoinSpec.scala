@@ -15,7 +15,7 @@ import graft.TestSpark
   * watermark never passes the tail); this spec drives the outer path with
   * controlled MemoryStream watermark advances, and the declared
   * `s_stream_outer` query drives it end-to-end via the sentinel-batch
-  * chunked replay (readEventsChunkedReplayFull) under the oracle hash
+  * chunked replay (EventsStream.replay) under the oracle hash
   * gate. */
 class LeftOuterJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -240,10 +240,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(finals.except(batch).count() == 0 && batch.except(finals).count() == 0)
   }
 
+  private def tmpEntries(prefix: String): Set[String] =
+    new java.io.File(sys.props("java.io.tmpdir")).list()
+      .filter(_.startsWith(prefix)).toSet
+
   test("chunked replay staging leaves only stream/ under its root") {
-    val (path, _) = EventsStream.stageEventsChunkedReplayFull(spark, dir, 4)
-    val root = new java.io.File(path).getParentFile
-    try {
+    val batch = Tables.load(spark, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("event_id").cast("long").as("event_id"), col("ts"),
+        col("user_id").cast("long").as("user_id"), col("event_type"))
+    val (chunk, maxUs) = EventsStream.timeSlices(batch, 4)
+    val sentinels = Seq(10, 20).zipWithIndex.map { case (days, j) =>
+      import spark.implicits._
+      val far = new java.sql.Timestamp(maxUs / 1000L + days * 86400000L)
+      Seq((-1L - 2 * j, far, -1L, "click"), (-2L - 2 * j, far, -1L, "error"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+    }
+    val before = tmpEntries("graft-replay-")
+    val staged = EventsStream.replay(spark, batch, chunk, 4, sentinels) { open =>
+      val roots = tmpEntries("graft-replay-") -- before
+      assert(roots.size == 1, roots.mkString(", "))
+      val root = new java.io.File(sys.props("java.io.tmpdir"), roots.head)
+      val path = new java.io.File(root, "stream").toString
       assert(root.list().toSeq == Seq("stream"), root.list().mkString(", "))
       // 4 event-time chunks + 2 sentinel files, every real row staged once
       // plus one 'click' and one 'error' row per sentinel
@@ -251,6 +269,35 @@ class StreamingSpec extends AnyFunSuite {
       val real = Tables.load(spark, dir, "events")
         .filter(col("user_id").isNotNull && col("ts").isNotNull).count()
       assert(spark.read.parquet(path).count() == real + 4)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+      // the opened stream reads the same files, one per micro-batch
+      EventsStream.runToMemory(spark, open(), "spec_replay", "append").count()
+    }
+    assert(staged == batch.count() + 4)
+    assert(tmpEntries("graft-replay-") == before, "the root must be gone after body")
+  }
+
+  test("replay deletes its root when body throws, and the exception reaches the caller") {
+    val before = tmpEntries("graft-replay-")
+    val e = intercept[IllegalStateException] {
+      EventsStream.replay(spark, spark.range(10).toDF("id"), col("id") % 2, 2) { _ =>
+        assert((tmpEntries("graft-replay-") -- before).size == 1)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(tmpEntries("graft-replay-") == before, "the root must be gone after a throw")
+  }
+
+  test("replayed queries leave java.io.tmpdir's graft-* listing unchanged") {
+    // the session's warehouse and the fixtures (published once per content)
+    // exist before the listing, also when this test runs alone
+    spark.version
+    graft.pipeline.Fixtures.dir
+    val before = tmpEntries("graft-")
+    Seq("s_cdc_stream", "s_knn_ingest", "s_stream_outer").foreach { q =>
+      assert(graft.SparkEntry.queries(q)(spark, dir).count() > 0, q)
+    }
+    val after = tmpEntries("graft-")
+    assert(after == before, s"new: ${(after -- before).mkString(", ")}")
   }
 }
